@@ -115,6 +115,18 @@ object Bench {
     calFlat && (parShift || satShift)
   }
 
+  /** A previous artifact is a tripwire baseline only when it ran at
+    * the same scale factor AND the same core count: r19's perf_warn
+    * entries were all 32-vs-8-core comparisons, which the cal
+    * normalization (a single-thread probe) cannot absorb. An artifact
+    * without a `cpus` stamp (written before it existed) never
+    * qualifies. */
+  private[graft] def comparable(prevJson: String, sfDir: String,
+      cpus: String): Boolean =
+    prevJson.contains("\"sf\":\"" + sfDir + "\"") &&
+      "\"cpus\":([0-9]+)".r.findFirstMatchIn(prevJson)
+        .exists(_.group(1) == cpus.trim)
+
   /** Entries regressed vs the previous artifact: name →
     * (wall, prevWall·calRatio, cpu, prevCpu·calRatio). Fires when the
     * cal-normalized CPU ratio exceeds 1.5× with ≥1 cpu-second of
@@ -241,6 +253,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
+    // the tripwire compares like with like: same sf, same core count
+    val baseline = prevDetail.filter(comparable(_, sfDir, cpus))
     val spark = Engine.prepare(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -331,8 +345,7 @@ object Bench {
     // rerun's 24-flag set vs 3 on a quiet box). None = no candidates,
     // so no confirmation ran.
     var confCal: Option[(Double, Double)] = None
-    val resampled = prevDetail
-      .filter(_.contains("\"sf\":\"" + sfDir + "\""))
+    val resampled = baseline
       .map { pj =>
         val firstBest = results.map { case (k, v) =>
           k -> { val b = v.minBy(_._1); (b._1, b._2) } }.toMap
@@ -391,10 +404,10 @@ object Bench {
         s""""jvm":{"post_warmup":$jvmPostWarm,"end":$jvmEnd}"""
     // Tripwire: cal-normalized per-entry regression diff vs the
     // previous committed artifact (empty block = quiet rerun). Only
-    // comparable at the same scale factor — a dev run at sf0.01 must
-    // not diff against the committed sf0.1 artifact.
-    val rawWarns = prevDetail
-      .filter(_.contains("\"sf\":\"" + sfDir + "\""))
+    // comparable at the same scale factor and core count — a dev run
+    // at sf0.01 or on 8 cores must not diff against a committed sf0.1
+    // 32-core artifact.
+    val rawWarns = baseline
       .map(pj => perfWarn(pj,
         (calPre + calPost) / 2.0,
         best.map { case (k, (w, c, _)) => k -> (w, c) }.toMap))
@@ -405,7 +418,7 @@ object Bench {
     // the parallel-throughput bracket (round 16): single-thread cal
     // flat + cal_par inflated vs the previous artifact = host state —
     // every flag demoted, stamped host_parallel_shift for the reader
-    val parShift = prevDetail.exists(pj => hostParallelShift(pj,
+    val parShift = baseline.exists(pj => hostParallelShift(pj,
       (calPre + calPost) / 2.0, (calParPre + calParPost) / 2.0,
       (calSatPre + calSatPost) / 2.0))
     val (warns, unconfirmed) =
@@ -420,7 +433,7 @@ object Bench {
     }.getOrElse("")
     val full = s"""{"metric":"total","value":${r4(total)},"unit":"sec",""" +
       s""""cpu_total":${r4(totalCpu)},$loadJson,$jvmJson,"sf":"$sfDir",""" +
-      s"""$confJson"host_parallel_shift":$parShift,""" +
+      s""""cpus":${cpus.trim},$confJson"host_parallel_shift":$parShift,""" +
       s""""perf_warn":${warnJson(warns)},""" +
       s""""perf_warn_unconfirmed":${warnJson(unconfirmed)},""" +
       s""""queries":$qs,"cpu":$cpu,"gc_ms":$gc,"samples":$raw}"""
@@ -448,7 +461,7 @@ object Bench {
     println(s"""{"metric":"total","value":${r4(total)},"unit":"sec",""" +
       s""""cpu_total":${r4(totalCpu)},"n_queries":${best.size},$loadJson,$jvmJson,""" +
       s""""perf_warn":${warnJson(warns.take(5))},""" +
-      s""""sf":"$sfDir","queries":$top,"queries_truncated_to_top20":true,""" +
+      s""""sf":"$sfDir","cpus":${cpus.trim},"queries":$top,"queries_truncated_to_top20":true,""" +
       s""""detail":"BENCH_DETAIL.json"}""")
     spark.stop()
   }

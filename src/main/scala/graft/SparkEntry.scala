@@ -2048,16 +2048,10 @@ object SparkEntry {
         .repartitionByRange(4, col("doc_id")), t, "overwrite")
       graft.ingest.TxLog.write(docsDf.where(col("doc_id") % 3 === 1)
         .repartitionByRange(2, col("doc_id")), t, "append")
-      def drain(): Unit = {
-        val q = graft.ingest.TxLog.streamSource(s, t)
-          .where(col("n_chars") >= 100)
-          .writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      def drain(): Unit =
+        graft.streaming.StreamStart.parquet(
+          graft.ingest.TxLog.streamSource(s, t).where(col("n_chars") >= 100),
+          s"$base/out", s"$base/ckpt").awaitTermination()
       drain()
       graft.ingest.TxLog.write(docsDf.where(col("doc_id") % 3 === 2)
         .repartitionByRange(2, col("doc_id")), t, "append")
@@ -2081,16 +2075,10 @@ object SparkEntry {
       graft.ingest.TxLog.write(docsDf.where(col("doc_id") % 3 === 0)
         .repartitionByRange(4, col("doc_id")), t, "overwrite")
       graft.ingest.TxLog.renameColumn(t, "n_chars", "chars")
-      def drain(): Unit = {
-        val q = graft.ingest.TxLog.streamSource(s, t)
-          .where(col("chars") >= 100)
-          .writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      def drain(): Unit =
+        graft.streaming.StreamStart.parquet(
+          graft.ingest.TxLog.streamSource(s, t).where(col("chars") >= 100),
+          s"$base/out", s"$base/ckpt").awaitTermination()
       drain()
       // an append THROUGH the mapping (stages under physical n_chars)
       graft.ingest.TxLog.write(docsDf.where(col("doc_id") % 3 === 1)
@@ -2117,16 +2105,10 @@ object SparkEntry {
         .repartitionByRange(4, col("doc_id")), t, "overwrite")
       graft.ingest.TxLog.write(docsDf.where(col("doc_id") % 3 === 1)
         .repartitionByRange(2, col("doc_id")), t, "append")
-      def drain(): Unit = {
-        val q = s.readStream.table(s"graft.`$t`")
-          .where(col("n_chars") >= 100)
-          .writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      def drain(): Unit =
+        graft.streaming.StreamStart.parquet(
+          s.readStream.table(s"graft.`$t`").where(col("n_chars") >= 100),
+          s"$base/out", s"$base/ckpt").awaitTermination()
       drain()
       graft.ingest.TxLog.write(docsDf.where(col("doc_id") % 3 === 2)
         .repartitionByRange(2, col("doc_id")), t, "append")
@@ -2282,15 +2264,10 @@ object SparkEntry {
       s.sql(s"ALTER TABLE graft.`$t` SET TBLPROPERTIES(" +
         s"'${graft.ingest.TxLog.DmlModeProp}'=" +
         s"'${graft.ingest.TxLog.DmlModeMor}')")
-      def drain(): Unit = {
-        val q = s.readStream.table(s"graft.`$t`.changes")
-          .writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      def drain(): Unit =
+        graft.streaming.StreamStart.parquet(
+          s.readStream.table(s"graft.`$t`.changes"),
+          s"$base/out", s"$base/ckpt").awaitTermination()
       drain() // the snapshot lands as inserts stamped v0
       s.sql(s"DELETE FROM graft.`$t` WHERE doc_id BETWEEN 50 AND 99") // v1
       s.sql(s"UPDATE graft.`$t` SET source = 'patched' " +
@@ -2330,19 +2307,15 @@ object SparkEntry {
         graft.ingest.TxLog.aggState(graft.ingest.TxLog.snapshot(s, t),
           Seq("lang"), Seq("n_chars")), m, "overwrite")
       def maintain(): Unit = {
-        val q = s.readStream.option("startingVersion", 1)
-          .table(s"graft.`$t`.changes")
-          .writeStream
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val state = graft.ingest.TxLog.snapshot(s, m)
-            graft.ingest.TxLog.write(
-              graft.ingest.TxLog.incrementalAgg(state,
-                batch.drop("_commit_version"), Seq("lang"), Seq("n_chars")),
-              m, "overwrite", batchId = id)
-            ()
-          }.start()
+        val q = graft.streaming.StreamStart.foreachBatch(
+            s.readStream.option("startingVersion", 1)
+              .table(s"graft.`$t`.changes"), s"$base/ckpt") { (batch, id) =>
+          val state = graft.ingest.TxLog.snapshot(s, m)
+          graft.ingest.TxLog.write(
+            graft.ingest.TxLog.incrementalAgg(state,
+              batch.drop("_commit_version"), Seq("lang"), Seq("n_chars")),
+            m, "overwrite", batchId = id)
+        }
         q.awaitTermination()
       }
       s.sql(s"DELETE FROM graft.`$t` WHERE doc_id BETWEEN 50 AND 99") // v1
@@ -2370,14 +2343,9 @@ object SparkEntry {
         .repartitionByRange(2, col("doc_id")), t, "append") // v1
       graft.ingest.TxLog.write(docsDf.where(col("doc_id") % 3 === 2)
         .repartitionByRange(2, col("doc_id")), t, "append") // v2
-      val q = s.readStream.option("startingVersion", 2)
-        .table(s"graft.`$t`")
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      graft.streaming.StreamStart.parquet(
+        s.readStream.option("startingVersion", 2).table(s"graft.`$t`"),
+        s"$base/out", s"$base/ckpt").awaitTermination()
       Engine.canonical(s.read.parquet(s"$base/out")
         .select("doc_id", "lang", "source", "n_chars"))
     }),

@@ -126,11 +126,8 @@ object StreamBench {
     }
 
     import graft.streaming.EventStream
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     def fileSink(df: DataFrame, out: String, ckpt: String): StreamingQuery =
-      df.writeStream.format("parquet").outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt).option("path", out)
-        .trigger(Trigger.AvailableNow()).start()
+      graft.streaming.StreamStart.parquet(df, out, ckpt)
     def src(in: String) = EventStream.source(spark, in,
       Map("timestampFormat" -> EventStream.microTsFormat,
         "maxFilesPerTrigger" -> filesPerTrigger.toString))

@@ -98,29 +98,47 @@ object Pin {
     * the tests assert properties of the real dataflow (map-side
     * partial aggregation, scan-side filters) that the pin build runs
     * verbatim. Thread-local so a concurrent bench/verify session is
-    * unaffected. Never used outside tests. */
+    * unaffected; nests (restores the previous value). Never used
+    * outside tests. */
   private val disabled = new ThreadLocal[Boolean] {
     override def initialValue: Boolean = false
   }
   def withDisabled[A](f: => A): A = {
+    val prev = disabled.get
     disabled.set(true)
-    try f finally disabled.set(false)
+    try f finally disabled.set(prev)
   }
 
-  /** Drop every memoised pin. Called by the bench harness BETWEEN
-    * entries (never inside a timed region) so each entry's first
-    * sample pays its own pin builds — min-of-2 then measures
-    * standalone entry cost instead of inheriting intermediates built
-    * by an earlier entry in the same family (r18 verdict item 2).
-    * Also the overflow action for the MaxEntries bound. */
-  def reset(): Unit = reg.clear()
+  /** Drop every memoised pin and release its checkpoint blocks. Called
+    * by the bench harnesses BETWEEN entries/passes (never inside a
+    * timed region) so each entry's first sample pays its own pin
+    * builds — min-of-2 then measures standalone entry cost instead of
+    * inheriting intermediates built by an earlier entry in the same
+    * family (r18 verdict item 2). Without the release, the blocks
+    * stayed until the ContextCleaner happened to collect the dropped
+    * frames (`getPersistentRDDs` grew by 3 per corpus pass). A frame
+    * obtained from `eager` before the reset must not be used after it:
+    * its lineage is cut, so it cannot recompute the released blocks. */
+  def reset(): Unit = {
+    val dropped = reg.values.toSeq
+    reg.clear()
+    dropped.foreach(checkpointRdd(_).foreach(_.unpersist(blocking = true)))
+  }
+
+  /** The locally checkpointed RDD behind a frame `sized` returned. */
+  private[graft] def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
 
   def eager(df: DataFrame): DataFrame = {
     if (disabled.get) return df
     val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized,
       df.schema.fieldNames.toSeq)
     reg.getOrElseUpdate(key, {
-      if (reg.size >= MaxEntries) reset()
+      // overflow drops references only: a caller may still hold an
+      // earlier pin, so its blocks are left to the ContextCleaner
+      if (reg.size >= MaxEntries) reg.clear()
       df.persist()
       val out = sized(df, df.count())
       df.unpersist()

@@ -2,7 +2,8 @@ package graft.ingest
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.streaming.StreamStart
 
 /** Jar-free transactional table log — the library's stand-in for the
   * reference's Delta Lake sink (REF STREAM:199-220 `writeStream
@@ -556,17 +557,19 @@ object TxLog {
     * dropped/oversized stats, or a double chunk whose bounds are NaN,
     * disqualifies the column → readers conservatively keep the file).
     * An all-null column records kind=allnull — a range predicate can
-    * never match it, so the file is pruned outright. Returns
-    * (rowCount, stats). */
-  private def footerInfo(table: String,
-      file: String): (Long, Map[String, ColStat]) = {
+    * never match it, so the file is pruned outright. Reads through
+    * the caller's (session) Hadoop configuration: a fresh
+    * `Configuration` re-parses the default resources on first use,
+    * about half of a footer read's time. Returns (rowCount, stats). */
+  private def footerInfo(conf: org.apache.hadoop.conf.Configuration,
+      table: String, file: String): (Long, Map[String, ColStat]) = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.LogicalTypeAnnotation
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(Paths.get(table, file).toString),
-        new org.apache.hadoop.conf.Configuration()))
+        conf))
     try {
       // per column: kind, merged (min, max) as canonical strings
       // (None while only all-null chunks seen), null count
@@ -679,7 +682,8 @@ object TxLog {
     // follow from the footers); the override carries fresh
     // assignments an evolving write is about to commit
     val cm = cmOverride.getOrElse(colMapAt(table)._1)
-    val infos = stage(df, table, cm).map(f => f -> footerInfo(table, f))
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val infos = stage(df, table, cm).map(f => f -> footerInfo(conf, table, f))
     val (empty, keep) = infos.partition(_._2._1 == 0L)
     empty.foreach { case (f, _) => Files.deleteIfExists(Paths.get(table, f)) }
     val files = keep.map(_._1)
@@ -2095,10 +2099,10 @@ object TxLog {
       staged: Seq[Path], ddl: String):
       (Seq[String], Map[String, Map[String, ColStat]]) = {
     val (cm, _) = colMapAt(table)
+    val conf = spark.sparkContext.hadoopConfiguration
     if (cm.nonEmpty && staged.nonEmpty) {
       val expected = org.apache.spark.sql.types.StructType.fromDDL(ddl)
         .fieldNames.map(physicalOf(_, cm)).toSet
-      val conf = new org.apache.hadoop.conf.Configuration()
       staged.foreach { p =>
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -2123,7 +2127,7 @@ object TxLog {
         Files.move(p, Paths.get(table, name), StandardCopyOption.ATOMIC_MOVE)
         name
       }
-    val infos = promoted.map(f => f -> footerInfo(table, f))
+    val infos = promoted.map(f => f -> footerInfo(conf, table, f))
     val (empty, keep) = infos.partition(_._2._1 == 0L)
     empty.foreach { case (f, _) => Files.deleteIfExists(Paths.get(table, f)) }
     val adds = keep.map(_._1)
@@ -3664,20 +3668,24 @@ object TxLog {
     * `autoCompactFiles` (0 = off) bounds the LIVE file count: past the
     * threshold a content-neutral compactToSize overwrite lands after
     * the batch commit (see `maybeCompact` for the stream-source
-    * interaction — published tables are never auto-compacted). */
+    * interaction — published tables are never auto-compacted).
+    *
+    * A dedup-only stream (`StreamJob.cleanStream(watermarked = true)`
+    * on pin/geo) runs ONE micro-batch and lands one commit per
+    * trigger: the empty batch Spark would schedule after each data
+    * batch to evict watermark-expired dedup state is switched off for
+    * this query, and the eviction happens in the next data batch. The
+    * switch is scoped around `.start()` on the caller's session (see
+    * `StreamStart` for why not a cloned session), so the query stays
+    * in `spark.streams` and its listeners hear it. */
   def streamSink(df: DataFrame, table: String,
       checkpointDir: String, autoCheckpointEvery: Int = 64,
       autoCompactFiles: Int = 0, appId: String = ""): StreamingQuery =
-    df.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        write(batch, table, "append", batchId = id, appId = appId)
-        maybeCheckpoint(table, autoCheckpointEvery)
-        maybeCompact(batch.sparkSession, table, autoCompactFiles); ()
-      }
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.foreachBatch(df, checkpointDir) { (batch, id) =>
+      write(batch, table, "append", batchId = id, appId = appId)
+      maybeCheckpoint(table, autoCheckpointEvery)
+      maybeCompact(batch.sparkSession, table, autoCompactFiles)
+    }
 
   /** Streaming CDC upsert sink (the streaming MERGE shape): every
     * micro-batch UPSERTS by `keys` with the `orderCol` sequence guard
@@ -3705,21 +3713,16 @@ object TxLog {
       autoCheckpointEvery: Int = 64,
       autoCompactFiles: Int = 0,
       mergeOnRead: Boolean = false): StreamingQuery =
-    df.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (mergeOnRead)
-          upsertOrderedVectored(batch.sparkSession, table, batch, keys,
-            orderCol, batchId = id)
-        else
-          upsertOrdered(batch.sparkSession, table, batch, keys, orderCol,
-            batchId = id)
-        maybeCheckpoint(table, autoCheckpointEvery)
-        maybeCompact(batch.sparkSession, table, autoCompactFiles); ()
-      }
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.foreachBatch(df, checkpointDir) { (batch, id) =>
+      if (mergeOnRead)
+        upsertOrderedVectored(batch.sparkSession, table, batch, keys,
+          orderCol, batchId = id)
+      else
+        upsertOrdered(batch.sparkSession, table, batch, keys, orderCol,
+          batchId = id)
+      maybeCheckpoint(table, autoCheckpointEvery)
+      maybeCompact(batch.sparkSession, table, autoCompactFiles)
+    }
 
   /** Streaming expectation sink — `writeExpect` per micro-batch (the
     * DLT streaming `expect_or_drop` + quarantine shape): every batch
@@ -3732,18 +3735,13 @@ object TxLog {
       expectations: Map[String, String], checkpointDir: String,
       autoCheckpointEvery: Int = 64,
       autoCompactFiles: Int = 0): StreamingQuery =
-    df.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeExpect(batch, table, quarantine, expectations, batchId = id)
-        maybeCheckpoint(table, autoCheckpointEvery)
-        maybeCheckpoint(quarantine, autoCheckpointEvery)
-        maybeCompact(batch.sparkSession, table, autoCompactFiles)
-        maybeCompact(batch.sparkSession, quarantine, autoCompactFiles); ()
-      }
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.foreachBatch(df, checkpointDir) { (batch, id) =>
+      writeExpect(batch, table, quarantine, expectations, batchId = id)
+      maybeCheckpoint(table, autoCheckpointEvery)
+      maybeCheckpoint(quarantine, autoCheckpointEvery)
+      maybeCompact(batch.sparkSession, table, autoCompactFiles)
+      maybeCompact(batch.sparkSession, quarantine, autoCompactFiles)
+    }
 
   /** Register a snapshot (optionally time-travel pinned) as a temp
     * view, so `spark.sql` queries a TxLog table the way the reference

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming ingest dedup against a STANDING corpus — the streaming
@@ -45,14 +45,8 @@ object CorpusStream {
 
   def runDedupVsIndex(spark: SparkSession, inDir: String, index: DataFrame,
       outDir: String, checkpointDir: String): StreamingQuery =
-    dedupVsIndex(source(spark, inDir), index)
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(dedupVsIndex(source(spark, inDir), index),
+      outDir, checkpointDir)
 
   /** The standing corpus' broadcastable MinHash band index — one row
     * per (band, bucket) with the bucket's member signatures as a list.
@@ -143,14 +137,8 @@ object CorpusStream {
 
   def runNearDupIngest(spark: SparkSession, inDir: String, corpus: DataFrame,
       outDir: String, checkpointDir: String): StreamingQuery =
-    nearDupVsCorpus(source(spark, inDir), corpus)
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(nearDupVsCorpus(source(spark, inDir), corpus),
+      outDir, checkpointDir)
 
   /** Composed streaming ingest gate — the full document admission
     * chain a production ingest ships, as ONE stateless streaming
@@ -194,14 +182,8 @@ object CorpusStream {
 
   def runFullIngest(spark: SparkSession, inDir: String, corpus: DataFrame,
       outDir: String, checkpointDir: String): StreamingQuery =
-    fullIngest(source(spark, inDir), corpus)
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(fullIngest(source(spark, inDir), corpus),
+      outDir, checkpointDir)
 
   /** Streaming quality gate — the batch curation tier run UNMODIFIED
     * on a document stream: `TextAnalysis.gopherRules` is a pure
@@ -259,10 +241,9 @@ object CorpusStream {
 
   def runCmsTokens(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").json(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    StreamStart.foreachBatch(spark.readStream.schema(docSchema)
+        .option("maxFilesPerTrigger", "1").json(inDir), checkpointDir) {
+      (batch, id) =>
         // stamp the batch id: CMS partials merge by per-cell SUM —
         // NOT idempotent (unlike the KMV/HLL siblings' union/max) —
         // so a replayed micro-batch (append landed, checkpoint
@@ -270,25 +251,16 @@ object CorpusStream {
         // compaction dedups by the stamp
         cmsTokenPartials(batch).withColumn("batch_id", lit(id))
           .write.mode("append").parquet(outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
 
   def runShapeFilter(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, minWords: Int = 20): StreamingQuery = {
     import graft.ext.TextAnalysis
-    TextAnalysis.gopherRules(source(spark, inDir), minWords)
+    val passed = TextAnalysis.gopherRules(source(spark, inDir), minWords)
       .where(TextAnalysis.shapePass(minWords))
       .select(col("doc_id"), col("n_words"), col("mean_word_len"),
         col("frac_alpha_words"))
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(passed, outDir, checkpointDir)
   }
 
   /** Streaming multimodal decode (round 13): arriving asset docs run
@@ -304,14 +276,9 @@ object CorpusStream {
     * the gate entry shares the batch twin). */
   def runDecodeStats(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    graft.ext.Multimodal.decodeStatsRobust(spark, source(spark, inDir))
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(
+      graft.ext.Multimodal.decodeStatsRobust(spark, source(spark, inDir)),
+      outDir, checkpointDir)
 
   val embSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
@@ -335,14 +302,8 @@ object CorpusStream {
     import graft.ext.Similarity
     val stream = spark.readStream.schema(embSchema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    Similarity.ivfAssignAgainst(stream, cents)
-      .select(col("vec_id"), col("cell"))
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(
+      Similarity.ivfAssignAgainst(stream, cents).select(col("vec_id"), col("cell")),
+      outDir, checkpointDir)
   }
 }

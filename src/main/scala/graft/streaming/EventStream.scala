@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Event-stream operators beyond the reference surface (the reference
@@ -78,15 +78,9 @@ object EventStream {
 
   def runSlidingWindowed(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    slidingWindowedAgg(source(spark, inDir,
-      Map("timestampFormat" -> microTsFormat)))
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(slidingWindowedAgg(source(spark, inDir,
+        Map("timestampFormat" -> microTsFormat))),
+      outDir, checkpointDir)
 
   /** Streaming distinct-user cardinality per (hour, event_type) via
     * the native `kmv_sketch` aggregate — unique-visitor counting whose
@@ -145,14 +139,10 @@ object EventStream {
       checkpointDir: String): StreamingQuery =
     // default-format landing (see runWindowed); one file per trigger so
     // a multi-file landing provably exercises the cross-batch merge
-    source(spark, inDir, Map("maxFilesPerTrigger" -> "1"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        kmvUsersPartials(batch).write.mode("append").parquet(outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.foreachBatch(
+        source(spark, inDir, Map("maxFilesPerTrigger" -> "1")), checkpointDir) {
+      (batch, _) => kmvUsersPartials(batch).write.mode("append").parquet(outDir)
+    }
 
   /** Streaming distinct-user cardinality per (hour, event_type) via
     * the native `hll_sketch` aggregate — the HLL sibling of
@@ -196,14 +186,10 @@ object EventStream {
 
   def runHllUsers(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    source(spark, inDir, Map("maxFilesPerTrigger" -> "1"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        hllUsersPartials(batch).write.mode("append").parquet(outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.foreachBatch(
+        source(spark, inDir, Map("maxFilesPerTrigger" -> "1")), checkpointDir) {
+      (batch, _) => hllUsersPartials(batch).write.mode("append").parquet(outDir)
+    }
 
   /** Streaming upsert-view maintenance (merge-on-read CDC pattern):
     * each micro-batch compacts to latest-per-key via
@@ -217,19 +203,13 @@ object EventStream {
     * layout. */
   def runUpsertLatest(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, maxFilesPerTrigger: Int = 1): StreamingQuery =
-    source(spark, inDir,
-      Map("maxFilesPerTrigger" -> maxFilesPerTrigger.toString,
-        "timestampFormat" -> microTsFormat))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ext.Changelog
-          .latestByKey(batch, Seq("user_id"), "ts", "event_id")
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.foreachBatch(source(spark, inDir,
+        Map("maxFilesPerTrigger" -> maxFilesPerTrigger.toString,
+          "timestampFormat" -> microTsFormat)), checkpointDir) { (batch, _) =>
+      graft.ext.Changelog
+        .latestByKey(batch, Seq("user_id"), "ts", "event_id")
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Stream-static enrichment join + windowed rollup — the canonical
     * streaming-ETL shape (enrich each event with a dimension attribute,
@@ -258,25 +238,13 @@ object EventStream {
 
   def runEnriched(spark: SparkSession, inDir: String, dim: DataFrame,
       outDir: String, checkpointDir: String): StreamingQuery =
-    enrichedWindowedAgg(source(spark, inDir), dim)
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(enrichedWindowedAgg(source(spark, inDir), dim),
+      outDir, checkpointDir)
 
   def runWindowed(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    windowedAgg(source(spark, inDir))
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(windowedAgg(source(spark, inDir)),
+      outDir, checkpointDir)
 
   /** Watermarked streaming exact-dedup — the streaming twin of
     * `Dedup.exact` for at-least-once sources (Kafka replays, emulator
@@ -285,7 +253,9 @@ object EventStream {
     * `dropDuplicatesWithinWatermark` evicts state once the watermark
     * passes — state is bounded by keys-per-horizon, not stream
     * lifetime (a plain streaming dropDuplicates would grow state
-    * forever at 100 TB). */
+    * forever at 100 TB). `runDedup` runs one micro-batch per trigger
+    * (`StreamStart`): eviction happens during the next data batch,
+    * not in an empty batch of its own. */
   def dedup(events: DataFrame, lateness: String = "30 minutes"): DataFrame =
     events
       .withWatermark("ts", lateness)
@@ -293,14 +263,9 @@ object EventStream {
 
   def runDedup(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    dedup(source(spark, inDir, Map("timestampFormat" -> microTsFormat)))
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(
+      dedup(source(spark, inDir, Map("timestampFormat" -> microTsFormat))),
+      outDir, checkpointDir)
 
   /** Stream-stream interval join — purchase attribution: every
     * purchase joined to the same user's views in the preceding
@@ -330,14 +295,9 @@ object EventStream {
 
   def runAttribution(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    attribution(source(spark, inDir, Map("timestampFormat" -> microTsFormat)))
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(
+      attribution(source(spark, inDir, Map("timestampFormat" -> microTsFormat))),
+      outDir, checkpointDir)
 
   // ---- gap sessionization (typed custom state) -----------------------
 
@@ -493,28 +453,14 @@ object EventStream {
 
   def runSessionizeTws(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    sessionizeTws(spark, source(spark, inDir,
-      Map("timestampFormat" -> microTsFormat)))
-      .toDF()
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(sessionizeTws(spark, source(spark, inDir,
+        Map("timestampFormat" -> microTsFormat))).toDF(),
+      outDir, checkpointDir)
 
   def runSessionize(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    sessionize(spark, source(spark, inDir))
-      .toDF()
-      .writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(sessionize(spark, source(spark, inDir)).toDF(),
+      outDir, checkpointDir)
 
   /** Batch twin of `windowedAgg` for stream≡batch verification: same
     * bucketing arithmetic over a static frame (no watermark cutoff). */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import graft.pipeline.Cleaning
 
@@ -20,7 +20,16 @@ import graft.pipeline.Cleaning
   * default; `watermarked = true` switches to `withWatermark +
   * dropDuplicatesWithinWatermark`, the 100 TB-safe configuration
   * (state is bounded by the lateness horizon; this is the mode a real
-  * deployment should run).
+  * deployment should run). Only pin and geo dedup: the reference's
+  * user dedup is a no-op (quirk Q-b), so user rows pass through
+  * unchanged in either mode, as in batch `Cleaning.cleanUser`.
+  *
+  * Every start goes through `StreamStart`: a watermarked (dedup-only)
+  * table runs ONE micro-batch per trigger — no empty eviction-only
+  * batch after it; expired dedup state is evicted in the next data
+  * batch instead. The switch is scoped around `.start()` on the
+  * caller's session, not set through a cloned session, so the query
+  * stays visible in `spark.streams` and to its listeners.
   *
   * Sink parity: no delta jar locally → parquet append + checkpoint
   * gives the same exactly-once-per-micro-batch semantics minus
@@ -55,11 +64,12 @@ object StreamJob {
       .select(col("parsed_data.*"))
 
   /** Cleaning on the stream: identical ops minus the batch-only sort;
-    * optional watermarked dedup for bounded state. The watermark rides
-    * on an ingest-time column (the reference streams carry no reliable
-    * event time on pin). */
+    * optional watermarked dedup for bounded state on the tables batch
+    * cleaning dedups (pin, geo — never user, quirk Q-b). The watermark
+    * rides on an ingest-time column (the reference streams carry no
+    * reliable event time on pin). */
   def cleanStream(raw: DataFrame, table: String, watermarked: Boolean): DataFrame = {
-    val deduped =
+    lazy val deduped =
       if (!watermarked) raw
       else raw.withColumn("ingest_ts", current_timestamp())
         .withWatermark("ingest_ts", "10 minutes")
@@ -71,20 +81,14 @@ object StreamJob {
       // above with bounded state.
       case "pin" => Cleaning.cleanPin(deduped, sort = false, dedup = !watermarked)
       case "geo" => Cleaning.cleanGeo(deduped, sort = false, dedup = !watermarked)
-      case "user" => Cleaning.cleanUser(deduped, sort = false)
+      case "user" => Cleaning.cleanUser(raw, sort = false)
     }
   }
 
   /** S10: append sink + per-table checkpoint (STREAM:199-220 shape). */
   def writeTable(df: DataFrame, table: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    df.writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", s"$checkpointDir/$table")
-      .option("path", s"$outDir/$table")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamStart.parquet(df, s"$outDir/$table", s"$checkpointDir/$table")
 
   val schemas: Map[String, StructType] =
     Map("pin" -> pinSchema, "geo" -> geoSchema, "user" -> userSchema)

@@ -168,4 +168,23 @@ class BenchTripwireSpec extends AnyFunSuite {
     // ...nor against a pre-16 artifact without par stamps
     assert(!Bench.hostParallelShift(prev, curCal = 1.55, curCalPar = 3.9))
   }
+
+  test("a cross-core-count pair stays silent: only same sf and cpus compare") {
+    val sf = "sf0.1"
+    val prev32 = """{"cal":{"pre":1.70,"post":1.74},"sf":"sf0.1","cpus":32,""" +
+      """"queries":{"q_heavy":0.43},"cpu":{"q_heavy":1.90}}"""
+    val prevNoCpus = prev32.replace("\"cpus\":32,", "")
+    // the r13-shaped regression, but measured on 8 cores against a
+    // 32-core artifact: fewer cores, more wall — not a code change
+    val cur = Map("q_heavy" -> (1.46, 10.8))
+    def warns(prevJson: String, cpus: String, sfDir: String = sf) =
+      Some(prevJson).filter(Bench.comparable(_, sfDir, cpus))
+        .map(Bench.perfWarn(_, 1.72, cur)).getOrElse(Seq.empty)
+    assert(warns(prev32, "8").isEmpty)
+    // same cores and sf still fire
+    assert(warns(prev32, "32").map(_._1) === Seq("q_heavy"))
+    // a different sf, or an artifact without a cpus stamp, never compares
+    assert(warns(prev32, "32", "sf0.01").isEmpty)
+    assert(warns(prevNoCpus, "32").isEmpty)
+  }
 }

@@ -655,6 +655,30 @@ class ExtSpec extends SparkSpec {
       s"pins must stay plan-keyed (no per-invocation growth): $cachedBefore -> $cachedCount")
   }
 
+  test("Pin.reset releases every dropped pin's checkpoint blocks; withDisabled nests") {
+    import graft.ext.Pin
+    val sc = spark.sparkContext
+    Pin.reset()
+    val pins = Seq(
+      Pin.eager(spark.range(100).toDF("id").where(col("id") % 3 === 0)),
+      Pin.eager(spark.range(50).toDF("x").groupBy((col("x") % 5).as("k")).count()))
+    val ids = pins.flatMap(Pin.checkpointRdd).map(_.id)
+    assert(ids.size == 2 && ids.forall(sc.getPersistentRDDs.contains))
+    Pin.reset()
+    assert(!ids.exists(sc.getPersistentRDDs.contains), "no pin RDD stays persisted")
+    assert(!sc.getRDDStorageInfo.exists(i => ids.contains(i.id) && i.numCachedPartitions > 0),
+      "no pin block stays stored")
+
+    val df = spark.range(10).toDF("id")
+    Pin.withDisabled {
+      Pin.withDisabled(())
+      assert(Pin.eager(df) eq df, "leaving the inner scope must not re-enable pins")
+    }
+    val pinned = Pin.eager(df)
+    assert(!(pinned eq df) && Pin.checkpointRdd(pinned).nonEmpty)
+    Pin.reset()
+  }
+
   test("dsirSelect/tokenizerFertility/contrastiveCrops: structure and determinism") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     // dsirSelect keeps ~the top half, all above the cutoff

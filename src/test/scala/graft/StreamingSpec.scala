@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import graft.ingest.Fixtures
+import graft.ingest.{Fixtures, TxLog}
 import graft.pipeline.{Cleaning, PinQueries}
 import graft.streaming.StreamJob
 
@@ -229,6 +229,111 @@ class StreamingSpec extends SparkSpec {
     val batch = Cleaning.cleanPin(graft.pipeline.RawDerive.tables(spark, sf)._1)
     // same dedup result as the unbounded reference mode on this data
     assert(streamed.count() == batch.count())
+  }
+
+  private def multiset(df: org.apache.spark.sql.DataFrame) =
+    df.select(df.columns.toIndexedSeq.map(c =>
+      org.apache.spark.sql.functions.col(c).cast("string")): _*)
+      .collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+
+  test("watermarked user stream == batch cleanUser as a multiset (Q-b dups survive)") {
+    val base = tmp("st_wm_user")
+    Fixtures.landStream(spark, sf, base)
+    StreamJob.runOne(spark, base, "user", s"$base/out", s"$base/ckpt",
+      watermarked = true)
+    val batch = PinQueries.cleanedTables(spark, sf)._3
+    assert(batch.count() > batch.distinct().count(),
+      "fixture must carry duplicate user rows")
+    assert(multiset(spark.read.parquet(s"$base/out/user")) == multiset(batch))
+  }
+
+  test("dedup-only TxLog.streamSink: one micro-batch and one commit per trigger") {
+    val base = tmp("st_onebatch")
+    Fixtures.landStream(spark, sf, base)
+    val (bp, bg, bu) = PinQueries.cleanedTables(spark, sf)
+    for ((t, batch) <- Seq(("pin", bp), ("geo", bg), ("user", bu))) {
+      val table = s"$base/tables/$t"
+      val src = StreamJob.source(spark, s"$base/streams/streaming-graft-$t",
+        StreamJob.schemas(t))
+      val q = TxLog.streamSink(StreamJob.cleanStream(src, t, watermarked = true),
+        table, s"$base/ckpt/$t")
+      q.awaitTermination()
+      // no empty eviction-only batch after the data batch
+      assert(q.recentProgress.length == 1,
+        s"$t progress: ${q.recentProgress.map(_.numInputRows).mkString(",")}")
+      assert(TxLog.latestVersion(table).contains(0L), s"$t: exactly one commit")
+      assert(multiset(TxLog.snapshot(spark, table)) == multiset(batch), s"$t content")
+    }
+    // the dedup state is still the watermarked, bounded kind
+    assert(new java.io.File(s"$base/ckpt/pin/state").isDirectory)
+  }
+
+  test("watermarked windowed aggregation keeps its no-data batch: the closed window lands") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.streaming.{EventStream, StreamStart}
+    val base = tmp("st_closedwin")
+    Seq((1L, "2024-01-01 10:05:00", 7L, "view", 1.0),
+      (2L, "2024-01-01 10:20:00", 7L, "view", 2.0),
+      (3L, "2024-01-01 12:45:00", 8L, "view", 4.0))
+      .toDF("event_id", "ts_s", "user_id", "event_type", "value")
+      .select(col("event_id"), to_timestamp(col("ts_s")).as("ts"),
+        col("user_id"), col("event_type"), col("value"))
+      .coalesce(1).write.json(s"$base/in")
+    val agg = EventStream.windowedAgg(EventStream.source(spark, s"$base/in"))
+    assert(!StreamStart.dedupOnly(agg.queryExecution.analyzed))
+    val q = TxLog.streamSink(agg, s"$base/table", s"$base/ckpt")
+    q.awaitTermination()
+    // the data batch closes no window (watermark starts at 0); the
+    // no-data batch after it, at watermark 12:15, closes 10:00-11:00
+    assert(q.recentProgress.map(_.numInputRows).toSeq == Seq(3L, 0L))
+    val got = TxLog.snapshot(spark, s"$base/table")
+      .select(col("window_start").cast("string"), col("n_events"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(got == Seq(("2024-01-01 10:00:00", 2L)), got.mkString(","))
+  }
+
+  test("the start scopes the no-data switch: caller's flag kept, listeners hear the query") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import graft.streaming.EventStream
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = seen.add(s"start ${e.id}")
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        seen.add(s"progress ${e.progress.id}")
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = seen.add(s"end ${e.id}")
+    }
+    val orig = spark.conf.getAll.get(key)
+    spark.streams.addListener(listener)
+    try {
+      val ev = spark.read.parquet(s"$sf/events.parquet")
+        .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
+          col("user_id"), col("event_type"), col("value"))
+      for ((prior, i) <- Seq(None, Some("true")).zipWithIndex) {
+        val base = tmp(s"st_scope$i")
+        // runDedup reads µs timestamps: land them so, or every ts is
+        // null and the watermark (and its empty batch) never moves
+        ev.union(ev.where(col("event_id") % 3 === 0)).coalesce(1).write
+          .option("timestampFormat", EventStream.microTsFormat).json(s"$base/in")
+        prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        val q = EventStream.runDedup(spark, s"$base/in", s"$base/out", s"$base/ckpt")
+        assert(spark.conf.getAll.get(key) == prior, "prior value restored")
+        q.awaitTermination()
+        assert(q.recentProgress.length == 1, "dedup-only: one micro-batch")
+        assert(spark.read.parquet(s"$base/out").count() == ev.count())
+        val want = Set(s"start ${q.id}", s"progress ${q.id}", s"end ${q.id}")
+        val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+        while (!want.forall(seen.contains) && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        assert(want.forall(seen.contains), s"listener saw: $seen")
+      }
+    } finally {
+      spark.streams.removeListener(listener)
+      orig.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("kmv partials: multi-batch stream merge == one-pass batch sketch") {
