@@ -28,6 +28,8 @@ import org.apache.spark.sql.SparkSession
   *    parallel stage is the unambiguous noisy-neighbor signature
   *    (self-inflicted cost shows cpu tracking ~cores×wall);
   *  - every raw per-query sample (min-of-2 spread).
+  * Per entry it also records `codegen_compiles`, the Janino compiles
+  * its samples caused: a generated-class cache thrash shows there.
   * Artifact-capture geometry (round-7 lesson): the driver keeps the
   * LAST 2000 bytes of stdout (BENCH_r05/r06 `tail` both = 2000 bytes,
   * `parsed: null` both rounds) — so the round-6 "headline first" order
@@ -260,15 +262,6 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // Driver-side Janino class cache (default 100 entries): a
-      // 182-plan suite evicts every warm-up-compiled codegen unit
-      // before its timed run, so timed samples execute freshly-loaded
-      // classes the JIT hasn't seen — the round-12 bisect measured
-      // 159 s of C2 compilation DURING the timed section and per-entry
-      // CPU inflation up to 3.2x on unchanged code. Sized to hold
-      // every stage of every entry at both SFs. Set in the builder so
-      // the once-per-JVM cache initializes with this value.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     // Pre-warm-up stamp: the only load reading the bench itself cannot
@@ -307,7 +300,10 @@ object Bench {
     // Per sample: (wall, process-cpu delta). The reported pair is the
     // min-WALL sample's two numbers — cpu of a different sample would
     // pair a cold cpu with a warm wall and the ratio would lie.
-    val results = SparkEntry.benchQueries.map { case (name, fn) =>
+    // Per entry: its samples and the Janino compiles they caused (a
+    // warm sample of a cached plan compiles nothing; a nonzero second
+    // sample means the generated-class cache thrashed).
+    val timed = SparkEntry.benchQueries.map { case (name, fn) =>
       // Standalone-entry honesty (r18 verdict item 2): drop pins
       // memoised by EARLIER entries before this entry's first sample,
       // outside the timed region — sample 1 then pays this entry's own
@@ -316,6 +312,7 @@ object Bench {
       // staying warm within the entry is the same behavior the pre-r18
       // lazy caches had.)
       graft.ext.Pin.reset()
+      val k0 = Engine.codegenCompiles()
       val samples = (1 to 2).map { _ =>
         val g0 = JvmStamp.gcMillis()
         val c0 = processCpuNs()
@@ -326,8 +323,9 @@ object Bench {
         val gc = JvmStamp.gcMillis() - g0
         (wall, cpu, gc)
       }
-      name -> samples
+      name -> (samples, Engine.codegenCompiles() - k0)
     }
+    val results = timed.map { case (name, (samples, _)) => name -> samples }
     val loadEnd = loadAvg()
     // Confirmation passes for tripwire candidates: per-entry in-suite
     // CPU on this box is bimodal with factor-3 noise (JIT churn, GC,
@@ -389,6 +387,8 @@ object Bench {
       .mkString("{", ",", "}")
     val gc = best.map { case (k, (_, _, g)) => "\"" + k + "\":" + g }
       .mkString("{", ",", "}")
+    val compiles = timed.map { case (k, (_, n)) => "\"" + k + "\":" + n }
+      .mkString("{", ",", "}")
     val raw = resampled.map { case (k, v) =>
       "\"" + k + "\":" + v.map(s => r4(s._1)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
@@ -436,7 +436,8 @@ object Bench {
       s""""cpus":${cpus.trim},$confJson"host_parallel_shift":$parShift,""" +
       s""""perf_warn":${warnJson(warns)},""" +
       s""""perf_warn_unconfirmed":${warnJson(unconfirmed)},""" +
-      s""""queries":$qs,"cpu":$cpu,"gc_ms":$gc,"samples":$raw}"""
+      s""""queries":$qs,"cpu":$cpu,"gc_ms":$gc,""" +
+      s""""codegen_compiles":$compiles,"samples":$raw}"""
     // 1. Durable copy: the full artifact as a file in the working tree
     // (stdout-capture truncation can't touch it).
     try {

@@ -1,7 +1,12 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 
 /** Session preparation + output canonicalization shared by every entry
   * point (SparkEntry.queries, Verify, Bench, tests). */
@@ -15,8 +20,11 @@ object Engine {
     *    both Spark and the DuckDB oracle must parse them in one zone.
     *  - AQE on: runtime coalescing + skew-join handling — the 100 TB
     *    posture baked in even on local[32].
+    *  - Generated-code reuse: see `sizeCodegenCache` and
+    *    `useIdInClassName` below.
     */
   def prepare(spark: SparkSession): SparkSession = {
+    sizeCodegenCache(spark)
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -49,8 +57,60 @@ object Engine {
     // it here covers every session.
     spark.conf.set("spark.sql.catalog.graft",
       "org.apache.spark.sql.graftx.GraftCatalog")
+    // Whole-stage class names carry the codegen stage id by default,
+    // and that id is part of the cached source text. AQE numbers
+    // stages in completion order, so the same stage body gets a new
+    // name (a cache miss and a fresh Janino compile) from run to run.
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     spark
   }
+
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Entries of Spark's generated-class cache (default 100). A
+    * recurring job plans the same queries pass after pass: a corpus
+    * pass alone touches ~185 distinct classes, so a 100-entry LRU
+    * walked cyclically never hits and every warm pass recompiles all
+    * of them, then runs the fresh classes cold in the JIT. The same
+    * cause showed in the 182-plan `graft.Bench` suite: the round-12
+    * bisect measured 159 s of C2 compilation DURING the timed section
+    * and per-entry CPU inflation up to 3.2x on unchanged code, because
+    * warm-up-compiled classes were evicted before their timed run.
+    * 5000 holds every stage of every bench entry at both scale
+    * factors. */
+  private[graft] val codegenCacheEntries = 5000
+
+  /** The cache size to install: the caller's explicit
+    * `spark.sql.codegen.cache.maxEntries`, else `codegenCacheEntries`. */
+  private[graft] def codegenCacheSize(explicit: Option[String]): Int =
+    explicit.map(_.trim.toInt).getOrElse(codegenCacheEntries)
+
+  /** Janino compiles so far in this JVM, one per generated class: a
+    * warm pass over cached plans should add none. */
+  private[graft] def codegenCompiles(): Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private val codegenCacheSized = new AtomicBoolean(false)
+
+  /** Spark reads the cache size once per JVM, in `CodeGenerator`'s
+    * static initializer, from whatever `SQLConf.get` returns then. The
+    * first `prepare` in a JVM initializes `CodeGenerator` under a conf
+    * carrying `codegenCacheSize` (`setConfString` has no static-conf
+    * check). If code was compiled before that, the cache already
+    * exists at its old size; say so once instead of failing. */
+  private def sizeCodegenCache(spark: SparkSession): Unit =
+    if (codegenCacheSized.compareAndSet(false, true)) {
+      val size = codegenCacheSize(
+        spark.sparkContext.getConf.getOption(CodegenCacheKey))
+      if (codegenCompiles() > 0)
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          "classes were compiled before the first Engine.prepare: the " +
+            s"generated-class cache keeps its earlier size, not $size")
+      val conf = new SQLConf
+      conf.setConfString(CodegenCacheKey, size.toString)
+      // the first reference to the object runs its static initializer
+      SQLConf.withExistingConf(conf)(java.util.Objects.requireNonNull(CodeGenerator))
+    }
 
   /** Deterministic total order over every output column (asc, NULLS
     * FIRST — Spark's asc default). The driver hash-compares results

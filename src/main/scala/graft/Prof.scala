@@ -23,7 +23,6 @@ object Prof {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -61,13 +60,15 @@ object Prof {
       fn(spark, sfDir).count()
       Thread.sleep(300) // drain listener bus
       synchronized { stages.clear(); jobs = 0 }
+      val k0 = Engine.codegenCompiles()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       df.count()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = Engine.codegenCompiles() - k0
       Thread.sleep(300) // drain listener bus
       val snap = synchronized { (stages.toVector, jobs) }
-      println(f"==== $name wall=$wall%.3f s jobs=${snap._2} stages=${snap._1.size} stageWallSum=${snap._1.map(_.wallMs).sum / 1000.0}%.3f s")
+      println(f"==== $name wall=$wall%.3f s jobs=${snap._2} stages=${snap._1.size} stageWallSum=${snap._1.map(_.wallMs).sum / 1000.0}%.3f s compiles=$compiles")
       snap._1.sortBy(-_.wallMs).take(30).foreach { s =>
         println(f"  [${s.id}%4d] ${s.wallMs}%6d ms tasks=${s.tasks}%3d run=${s.runMs}%6d cpu=${s.cpuMs}%6d deser=${s.deserMs}%6d dcpu=${s.deserCpuMs}%6d shR=${s.shRead}%9d shW=${s.shWrite}%9d ${s.name}")
       }

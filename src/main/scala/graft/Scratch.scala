@@ -13,7 +13,6 @@ object Scratch {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.scheduler._

@@ -265,9 +265,11 @@ object ImageCodec {
     // is already an in-memory byte array; cache in memory.
     val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
       new java.io.ByteArrayInputStream(bytes))
-    // no explicit close: ImageIO.read(ImageInputStream) closes the
-    // stream itself (a second close throws "closed")
+    // ImageIO.read(ImageInputStream) closes the stream itself once a
+    // reader claims it (a second close throws "closed"), but returns
+    // null with the stream still open when none does
     val bi = javax.imageio.ImageIO.read(iis)
+    if (bi == null) iis.close()
     require(bi != null, "no ImageIO reader claims this payload")
     val w = bi.getWidth; val h = bi.getHeight
     require(w > 0 && h > 0 && w.toLong * h <= Int.MaxValue,
@@ -343,22 +345,24 @@ object ImageCodec {
     // cache — one spool file per decoded clip (see decodeImageIo)
     val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
       new java.io.ByteArrayInputStream(bytes))
-    val readers = javax.imageio.ImageIO.getImageReaders(iis)
-    require(readers.hasNext, "no reader claims this payload")
-    val r = readers.next()
     try {
-      r.setInput(iis)
-      val n = r.getNumImages(true)
-      require(n > 0, "no frames")
-      (0 until n).map { f =>
-        val bi = r.read(f)
-        val w = bi.getWidth; val h = bi.getHeight
-        val argb = bi.getRGB(0, 0, w, h, null, 0, w)
-        var i = 0
-        while (i < argb.length) { argb(i) &= 0xffffff; i += 1 }
-        Image(w, h, argb)
-      }
-    } finally { r.dispose(); iis.close() }
+      val readers = javax.imageio.ImageIO.getImageReaders(iis)
+      require(readers.hasNext, "no reader claims this payload")
+      val r = readers.next()
+      try {
+        r.setInput(iis)
+        val n = r.getNumImages(true)
+        require(n > 0, "no frames")
+        (0 until n).map { f =>
+          val bi = r.read(f)
+          val w = bi.getWidth; val h = bi.getHeight
+          val argb = bi.getRGB(0, 0, w, h, null, 0, w)
+          var i = 0
+          while (i < argb.length) { argb(i) &= 0xffffff; i += 1 }
+          Image(w, h, argb)
+        }
+      } finally r.dispose()
+    } finally iis.close()
   }
 
   /** Permissive multi-frame decode — quarantine contract as

@@ -80,10 +80,22 @@ class EventStreamSpec extends SparkSpec {
     val ev = spark.read.parquet(s"$sf/events.parquet")
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         col("user_id"), col("event_type"), col("value"))
-    ev.union(ev.where(col("event_id") % 3 === 0))
-      .coalesce(1).write.mode("overwrite").json(s"$base/in")
-    EventStream.runDedup(spark, s"$base/in", s"$base/out", s"$base/ckpt")
-      .awaitTermination()
+    // runDedup reads µs timestamps: land them so, or every ts is null
+    // and the watermark never moves. Two landings split in time, one
+    // run each over the same checkpoint: the second run's batch
+    // starts from the first run's watermark and evicts its state.
+    val cut = ev.agg(expr("percentile(unix_micros(ts), 0.5)")).head().getDouble(0)
+    val withDups = ev.union(ev.where(col("event_id") % 3 === 0))
+    val removed = Seq(unix_micros(col("ts")) <= cut,
+        unix_micros(col("ts")) > cut).map { half =>
+      withDups.where(half).coalesce(1).write.mode("append")
+        .option("timestampFormat", EventStream.microTsFormat).json(s"$base/in")
+      val q = EventStream.runDedup(spark, s"$base/in", s"$base/out", s"$base/ckpt")
+      q.awaitTermination()
+      q.recentProgress.flatMap(_.stateOperators).map(_.numRowsRemoved).sum
+    }
+    assert(removed.head == 0 && removed(1) > 0,
+      s"second run evicts the first run's expired state: $removed")
     val out = spark.read.parquet(s"$base/out")
     assert(out.count() == ev.count(), "each event exactly once")
     assert(out.select("event_id").distinct().count() == ev.count())
