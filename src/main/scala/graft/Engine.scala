@@ -20,8 +20,8 @@ object Engine {
     *    both Spark and the DuckDB oracle must parse them in one zone.
     *  - AQE on: runtime coalescing + skew-join handling — the 100 TB
     *    posture baked in even on local[32].
-    *  - Generated-code reuse: see `sizeCodegenCache` and
-    *    `useIdInClassName` below.
+    *  - Generated-code reuse: see `sizeCodegenCache`,
+    *    `useIdInClassName` and artifact isolation below.
     */
   def prepare(spark: SparkSession): SparkSession = {
     sizeCodegenCache(spark)
@@ -62,6 +62,20 @@ object Engine {
     // stages in completion order, so the same stage body gets a new
     // name (a cache miss and a fresh Janino compile) from run to run.
     spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
+    // Spark caches a generated class by (task thread's context class
+    // loader, source). With artifact isolation on (the default), every
+    // session UUID gets its own executor class loader, and every
+    // streaming `.start()` clones the session under a new UUID, so
+    // each trigger of a recurring query would recompile every class
+    // the trigger before it compiled. The library adds no per-session
+    // artifacts (jars, files, classes), so isolation buys it nothing.
+    // Each session's ArtifactManager reads the flag lazily from its own
+    // runtime conf, so the clones made at `.start()` inherit it. An
+    // explicit value in the caller's SparkConf (a deployment that adds
+    // per-session jars needs it on) is already in the session's conf.
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    if (!spark.sparkContext.getConf.contains(isolation))
+      spark.conf.set(isolation, "false")
     spark
   }
 

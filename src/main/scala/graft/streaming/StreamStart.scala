@@ -30,7 +30,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQu
   * lock keeps two library starts from seeing each other's value. Not
   * by re-binding the frame to `cloneSession()`: a query started from a
   * cloned session is missing from the caller's `spark.streams.active`
-  * and its `StreamingQueryListener`s never hear from it. */
+  * and its `StreamingQueryListener`s never hear from it.
+  *
+  * Because each `.start()` clones the caller's session, any conf the
+  * query's execution depends on (`Engine.prepare`'s artifact-isolation
+  * switch, which lets triggers reuse generated classes) must already
+  * be set on the caller's session. */
 object StreamStart {
 
   private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions.col
 
 /** Generated-code reuse owned by `Engine.prepare`: the class cache is
-  * sized past Spark's 100-entry default, and class names carry no
-  * stage ids, so a warm pass over plans already run compiles nothing. */
+  * sized past Spark's 100-entry default, class names carry no stage
+  * ids, and sessions share one executor class loader, so a warm pass
+  * over plans already run compiles nothing. */
 class EngineSpec extends SparkSpec {
 
   test("a warm pass over 150 distinct plans compiles no class") {
@@ -26,5 +27,9 @@ class EngineSpec extends SparkSpec {
     assert(Engine.codegenCacheSize(Some("250")) == 250)
     assert(Engine.codegenCacheSize(None) == Engine.codegenCacheEntries)
     assert(Engine.codegenCacheEntries > 100)
+  }
+
+  test("prepare turns off per-session artifact isolation") {
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 }

@@ -268,6 +268,38 @@ class StreamingSpec extends SparkSpec {
     assert(new java.io.File(s"$base/ckpt/pin/state").isDirectory)
   }
 
+  /** Land `table`'s two stream files one at a time and drain each into
+    * one TxLog sink over one checkpoint: the classes each run compiled. */
+  private def compilesPerTrigger(table: String, watermarked: Boolean): Seq[Long] = {
+    val base = tmp(s"st_reuse_$table")
+    Fixtures.landStream(spark, sf, s"$base/staged")
+    val files = new java.io.File(s"$base/staged/streams/streaming-graft-$table")
+      .listFiles().filter(_.getName.endsWith(".json")).sortBy(_.getName).toSeq
+    assert(files.length == 2)
+    val dir = new java.io.File(s"$base/streams/streaming-graft-$table")
+    dir.mkdirs()
+    files.map { f =>
+      Files.move(f.toPath, dir.toPath.resolve(f.getName))
+      val before = Engine.codegenCompiles()
+      val src = StreamJob.source(spark, dir.getPath, StreamJob.schemas(table))
+      TxLog.streamSink(StreamJob.cleanStream(src, table, watermarked),
+        s"$base/table", s"$base/ckpt").awaitTermination()
+      Engine.codegenCompiles() - before
+    }
+  }
+
+  test("a second trigger of the stateless user stream compiles no class") {
+    val compiles = compilesPerTrigger("user", watermarked = false)
+    assert(compiles(1) == 0, s"compiles per trigger: ${compiles.mkString(",")}")
+  }
+
+  test("a second trigger of the watermarked pin stream compiles only its per-batch literals") {
+    // the `current_timestamp()` projection and the dedup watermark
+    // predicate inline a per-batch µs value into their source
+    val compiles = compilesPerTrigger("pin", watermarked = true)
+    assert(compiles(1) <= 3, s"compiles per trigger: ${compiles.mkString(",")}")
+  }
+
   test("watermarked windowed aggregation keeps its no-data batch: the closed window lands") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
