@@ -22,6 +22,8 @@ object Engine {
     *    posture baked in even on local[32].
     *  - Generated-code reuse: see `sizeCodegenCache`,
     *    `useIdInClassName` and artifact isolation below.
+    *  - Local disk: `LocalFs.install` swaps in a Hadoop local
+    *    filesystem that forks no `chmod`/`readlink` per file.
     */
   def prepare(spark: SparkSession): SparkSession = {
     sizeCodegenCache(spark)
@@ -76,6 +78,11 @@ object Engine {
     val isolation = "spark.sql.artifact.isolation.enabled"
     if (!spark.sparkContext.getConf.contains(isolation))
       spark.conf.set(isolation, "false")
+    // Every parquet write, TxLog staging, streaming offset/commit log and
+    // RocksDB state upload goes through Hadoop's local filesystem, which
+    // without libhadoop forks a process per file permission and per
+    // rename (see `LocalFs`). Sessions' Hadoop confs copy this one.
+    graft.ingest.LocalFs.install(spark.sparkContext.hadoopConfiguration)
     spark
   }
 

@@ -29,6 +29,14 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(only))
+    spark.stop()
+  }
+
+  /** The oracle twins of the dumped entries, as the JSON object the
+    * checker reads: with a filter, only the entries it names, so none
+    * is checked against a dump that was never written. */
+  def oracleJson(only: Option[Set[String]]): String = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -41,9 +49,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    SparkEntry.oracleSql
+      .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

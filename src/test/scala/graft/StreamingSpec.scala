@@ -268,9 +268,9 @@ class StreamingSpec extends SparkSpec {
     assert(new java.io.File(s"$base/ckpt/pin/state").isDirectory)
   }
 
-  /** Land `table`'s two stream files one at a time and drain each into
-    * one TxLog sink over one checkpoint: the classes each run compiled. */
-  private def compilesPerTrigger(table: String, watermarked: Boolean): Seq[Long] = {
+  /** Stage `table`'s two stream files; each returned run lands one of
+    * them and drains it into one TxLog sink over one checkpoint. */
+  private def triggers(table: String, watermarked: Boolean): Seq[() => Unit] = {
     val base = tmp(s"st_reuse_$table")
     Fixtures.landStream(spark, sf, s"$base/staged")
     val files = new java.io.File(s"$base/staged/streams/streaming-graft-$table")
@@ -278,15 +278,21 @@ class StreamingSpec extends SparkSpec {
     assert(files.length == 2)
     val dir = new java.io.File(s"$base/streams/streaming-graft-$table")
     dir.mkdirs()
-    files.map { f =>
+    files.map { f => () =>
       Files.move(f.toPath, dir.toPath.resolve(f.getName))
-      val before = Engine.codegenCompiles()
       val src = StreamJob.source(spark, dir.getPath, StreamJob.schemas(table))
       TxLog.streamSink(StreamJob.cleanStream(src, table, watermarked),
         s"$base/table", s"$base/ckpt").awaitTermination()
-      Engine.codegenCompiles() - before
     }
   }
+
+  /** The classes each of `triggers`' runs compiled. */
+  private def compilesPerTrigger(table: String, watermarked: Boolean): Seq[Long] =
+    triggers(table, watermarked).map { run =>
+      val before = Engine.codegenCompiles()
+      run()
+      Engine.codegenCompiles() - before
+    }
 
   test("a second trigger of the stateless user stream compiles no class") {
     val compiles = compilesPerTrigger("user", watermarked = false)
@@ -298,6 +304,28 @@ class StreamingSpec extends SparkSpec {
     // predicate inline a per-batch µs value into their source
     val compiles = compilesPerTrigger("pin", watermarked = true)
     assert(compiles(1) <= 3, s"compiles per trigger: ${compiles.mkString(",")}")
+  }
+
+  test("a watermarked trigger and its restart fork no chmod or readlink") {
+    import scala.jdk.CollectionConverters._
+    // the first run commits RocksDB state, the second reloads it from
+    // the checkpoint; offset/commit logs and TxLog staging on both
+    val runs = triggers("pin", watermarked = true)
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val dump = Files.createTempFile("spawns", ".jfr")
+    try {
+      rec.start()
+      runs.foreach(_())
+      rec.stop()
+      rec.dump(dump)
+    } finally rec.close()
+    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+      .map(_.getString("command")).toSeq
+    // Spark's own `rm -rf` of RocksDB's local checkpoint dirs may run
+    val helpers = commands.filter(c =>
+      Set("chmod", "readlink")(c.trim.takeWhile(_ != ' ').split('/').last))
+    assert(helpers.size == 0, s"of ${commands.size} starts, e.g. ${helpers.take(3).mkString("; ")}")
   }
 
   test("watermarked windowed aggregation keeps its no-data batch: the closed window lands") {
