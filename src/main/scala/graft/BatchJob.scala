@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.{PinQueries, PinSql}
 
 /** The reference's daily batch run as one schedulable main — the
@@ -21,15 +20,7 @@ object BatchJob {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_batch").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = Engine.prepare(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
 
     val (pin, geo, user) = PinQueries.cleanedTables(spark, sfDir)
     PinSql.registerViews(pin, geo, user)

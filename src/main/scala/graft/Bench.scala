@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** Per-round benchmark main (driver contract): times the headline
   * queries on SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -64,27 +67,35 @@ object Bench {
     * state noise on this box, and only a regression that PERSISTS in
     * a settled JVM is signal. */
   private[graft] def numMap(json: String, key: String): Map[String, Double] =
-    ("\"" + key + "\":\\{([^}]*)\\}").r.findFirstMatchIn(json).map { m =>
-      "\"([A-Za-z0-9_]+)\":(-?[0-9.]+)".r.findAllMatchIn(m.group(1))
-        .map(mm => mm.group(1) -> mm.group(2).toDouble).toMap
-    }.getOrElse(Map.empty)
+    parse(json) \ key match {
+      case JObject(fields) =>
+        fields.flatMap { case (k, v) => num(v).map(k -> _) }.toMap
+      case _ => Map.empty
+    }
 
-  private[graft] def calAvg(json: String): Option[Double] =
-    // no closing-brace anchor: the cal object also carries the
-    // par_pre/par_post stamps since round 16
-    "\"cal\":\\{\"pre\":([0-9.]+),\"post\":([0-9.]+)".r
-      .findFirstMatchIn(json)
-      .map(m => (m.group(1).toDouble + m.group(2).toDouble) / 2.0)
-
+  private[graft] def calAvg(json: String): Option[Double] = calMean(json, "")
   private[graft] def calParAvg(json: String): Option[Double] =
-    "\"par_pre\":([0-9.]+),\"par_post\":([0-9.]+)".r
-      .findFirstMatchIn(json)
-      .map(m => (m.group(1).toDouble + m.group(2).toDouble) / 2.0)
-
+    calMean(json, "par_")
   private[graft] def calSatAvg(json: String): Option[Double] =
-    "\"sat_pre\":([0-9.]+),\"sat_post\":([0-9.]+)".r
-      .findFirstMatchIn(json)
-      .map(m => (m.group(1).toDouble + m.group(2).toDouble) / 2.0)
+    calMean(json, "sat_")
+
+  /** Mean of the `cal` object's `<prefix>pre` and `<prefix>post` stamps. */
+  private def calMean(json: String, prefix: String): Option[Double] = {
+    val cal = parse(json) \ "cal"
+    for (a <- num(cal \ s"${prefix}pre"); b <- num(cal \ s"${prefix}post"))
+      yield (a + b) / 2.0
+  }
+
+  /** A previous artifact that does not parse reads as an empty one,
+    * so it is no baseline. */
+  private def parse(json: String): JValue =
+    try JsonMethods.parse(json) catch { case NonFatal(_) => JNothing }
+
+  private def num(v: JValue): Option[Double] = v match {
+    case JDouble(d) => Some(d)
+    case JInt(i) => Some(i.toDouble)
+    case _ => None
+  }
 
   /** The host-shift signature that cost rounds 14-15 manual
     * cross-commit forensics, made mechanical (round 16): single-
@@ -124,10 +135,13 @@ object Bench {
     * without a `cpus` stamp (written before it existed) never
     * qualifies. */
   private[graft] def comparable(prevJson: String, sfDir: String,
-      cpus: String): Boolean =
-    prevJson.contains("\"sf\":\"" + sfDir + "\"") &&
-      "\"cpus\":([0-9]+)".r.findFirstMatchIn(prevJson)
-        .exists(_.group(1) == cpus.trim)
+      cpus: String): Boolean = {
+    val prev = parse(prevJson)
+    prev \ "sf" == JString(sfDir) && (prev \ "cpus" match {
+      case JInt(n) => n.toString == cpus.trim
+      case _ => false
+    })
+  }
 
   /** Entries regressed vs the previous artifact: name →
     * (wall, prevWall·calRatio, cpu, prevCpu·calRatio). Fires when the
@@ -203,21 +217,6 @@ object Bench {
       }
     } catch { case _: Exception => () } // warm-up only: never fatal
 
-  /** [1m, 5m, 15m] host load averages (Linux); empty elsewhere. */
-  private def loadAvg(): Seq[Double] =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString
-      .split("\\s+").take(3).map(_.toDouble).toSeq
-    catch { case _: Exception => Seq.empty }
-
-  /** Cumulative CPU nanoseconds of THIS JVM process (all threads —
-    * executor pool included, which is the point: a query's cpu delta
-    * measures work actually scheduled, unaffected by other processes);
-    * -1 where the platform bean is unavailable. */
-  private def processCpuNs(): Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-      case _ => -1L
-    }
   def main(args: Array[String]): Unit = {
     // Ambient stamp as the FIRST statement of main — before the
     // SparkSession exists, before any Spark thread runs. The round-9
@@ -228,7 +227,7 @@ object Bench {
     // 1-minute average HERE predates every cycle this JVM spent (only
     // sbt's compile/launch overhead can contribute, and a no-op
     // incremental compile contributes ~nothing).
-    val loadAmbient = loadAvg()
+    val loadAmbient = JvmStamp.loadAvg()
     // Previous round's committed artifact, read BEFORE this run
     // overwrites it — the tripwire baseline.
     val prevDetail =
@@ -253,20 +252,12 @@ object Bench {
     val calSatPre = JvmStamp.calibratePar(
       Runtime.getRuntime.availableProcessors())
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     // the tripwire compares like with like: same sf, same core count
-    val baseline = prevDetail.filter(comparable(_, sfDir, cpus))
-    val spark = Engine.prepare(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val baseline = prevDetail.filter(comparable(_, sfDir, Engine.cpus.toString))
+    val spark = Engine.session()
     // Pre-warm-up stamp: the only load reading the bench itself cannot
     // have inflated — a high 1-minute average HERE is external load.
-    val loadPre = loadAvg()
+    val loadPre = JvmStamp.loadAvg()
     // Untimed warm-up (standard benchmark methodology — JMH-style):
     // (1) a trivial shuffle job pays the one-off JVM costs (executor
     // thread pool, codegen compiler, shuffle machinery); (2) each bench
@@ -296,7 +287,7 @@ object Bench {
     // local[32] shares the host with whatever else runs, and a single
     // sample conflates query cost with scheduler noise — the min is the
     // reproducible execution time.
-    val loadStart = loadAvg()
+    val loadStart = JvmStamp.loadAvg()
     // Per sample: (wall, process-cpu delta). The reported pair is the
     // min-WALL sample's two numbers — cpu of a different sample would
     // pair a cold cpu with a warm wall and the ratio would lie.
@@ -315,18 +306,18 @@ object Bench {
       val k0 = Engine.codegenCompiles()
       val samples = (1 to 2).map { _ =>
         val g0 = JvmStamp.gcMillis()
-        val c0 = processCpuNs()
+        val c0 = JvmStamp.processCpuNs()
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
         val wall = (System.nanoTime() - t0) / 1e9
-        val cpu = if (c0 < 0) -1.0 else (processCpuNs() - c0) / 1e9
+        val cpu = if (c0 < 0) -1.0 else (JvmStamp.processCpuNs() - c0) / 1e9
         val gc = JvmStamp.gcMillis() - g0
         (wall, cpu, gc)
       }
       name -> (samples, Engine.codegenCompiles() - k0)
     }
     val results = timed.map { case (name, (samples, _)) => name -> samples }
-    val loadEnd = loadAvg()
+    val loadEnd = JvmStamp.loadAvg()
     // Confirmation passes for tripwire candidates: per-entry in-suite
     // CPU on this box is bimodal with factor-3 noise (JIT churn, GC,
     // shared-cache state — BenchOne floors for 4 entries the first
@@ -358,14 +349,14 @@ object Bench {
               // the confirmation pair starts from a cold pin registry
               if (i == 1) graft.ext.Pin.reset()
               val g0 = JvmStamp.gcMillis()
-              val c0 = processCpuNs()
+              val c0 = JvmStamp.processCpuNs()
               val t0 = System.nanoTime()
               try {
                 SparkEntry.benchQueries.find(_._1 == name)
                   .foreach(_._2(spark, sfDir).count())
               } catch { case _: Throwable => () }
               val wall = (System.nanoTime() - t0) / 1e9
-              val cpu = if (c0 < 0) -1.0 else (processCpuNs() - c0) / 1e9
+              val cpu = if (c0 < 0) -1.0 else (JvmStamp.processCpuNs() - c0) / 1e9
               (wall, cpu, JvmStamp.gcMillis() - g0)
             })
           }
@@ -433,7 +424,7 @@ object Bench {
     }.getOrElse("")
     val full = s"""{"metric":"total","value":${r4(total)},"unit":"sec",""" +
       s""""cpu_total":${r4(totalCpu)},$loadJson,$jvmJson,"sf":"$sfDir",""" +
-      s""""cpus":${cpus.trim},$confJson"host_parallel_shift":$parShift,""" +
+      s""""cpus":${Engine.cpus},$confJson"host_parallel_shift":$parShift,""" +
       s""""perf_warn":${warnJson(warns)},""" +
       s""""perf_warn_unconfirmed":${warnJson(unconfirmed)},""" +
       s""""queries":$qs,"cpu":$cpu,"gc_ms":$gc,""" +
@@ -462,7 +453,7 @@ object Bench {
     println(s"""{"metric":"total","value":${r4(total)},"unit":"sec",""" +
       s""""cpu_total":${r4(totalCpu)},"n_queries":${best.size},$loadJson,$jvmJson,""" +
       s""""perf_warn":${warnJson(warns.take(5))},""" +
-      s""""sf":"$sfDir","cpus":${cpus.trim},"queries":$top,"queries_truncated_to_top20":true,""" +
+      s""""sf":"$sfDir","cpus":${Engine.cpus},"queries":$top,"queries_truncated_to_top20":true,""" +
       s""""detail":"BENCH_DETAIL.json"}""")
     spark.stop()
   }

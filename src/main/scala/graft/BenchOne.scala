@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time individual entries (args = names), printing as each
   * finishes — for isolating slow queries. Each entry runs
   * SPARK_GRAFT_PASSES times (default 6; pass 1 is cold) and the
@@ -13,36 +11,20 @@ import org.apache.spark.sql.SparkSession
   * A fixed-work calibration probe (JvmStamp.calibrate) brackets the
   * run: its wall time is host throughput, comparable across rounds. */
 object BenchOne {
+  /** The 1-minute host load average as /proc/loadavg prints it. */
+  private def load1m(): String =
+    JvmStamp.loadAvg().headOption.fold("?")(v => f"$v%.2f")
+
   def main(args: Array[String]): Unit = {
     // ambient stamp BEFORE the SparkSession exists (same first-class
     // noise evidence as Bench's load_avg.ambient_premain field)
-    val ambient =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+").take(1).mkString
-      catch { case _: Exception => "?" }
+    val ambient = load1m()
     val calPre = JvmStamp.calibrate()
     val calParPre = JvmStamp.calibratePar()
     println(f"[benchone] ambient_premain load1m=$ambient cal_pre=$calPre%.3f s cal_par_pre=$calParPre%.3f s")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "6").toInt
-    val spark = Engine.prepare(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
-    def load(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+").take(1).mkString
-      catch { case _: Exception => "?" }
-    def cpuNs(): Long =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-        case _ => -1L
-      }
+    val spark = Engine.session()
     // Previous committed full-bench artifact for the vs_prev stamp on
     // each FLOOR line (same cal-normalized diff the Bench tripwire
     // uses; informational here — BenchOne is the isolation tool).
@@ -60,15 +42,15 @@ object BenchOne {
     args.foreach { name =>
       val samples = (1 to passes).map { pass =>
         val g0 = JvmStamp.gcMillis(); val j0 = JvmStamp.jitMillis()
-        val c0 = cpuNs()
+        val c0 = JvmStamp.processCpuNs()
         val t0 = System.nanoTime()
         val n = SparkEntry.queries(name)(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        val cpu = if (c0 < 0) -1.0 else (cpuNs() - c0) / 1e9
+        val cpu = if (c0 < 0) -1.0 else (JvmStamp.processCpuNs() - c0) / 1e9
         val gc = JvmStamp.gcMillis() - g0
         val jit = if (j0 < 0) -1L else JvmStamp.jitMillis() - j0
         val tag = if (pass == 1) "cold" else s"p$pass"
-        println(f"[benchone] $name ($tag) rows=$n wall=$wall%.2f cpu=$cpu%.2f gc_ms=$gc jit_ms=$jit load1m=${load()}")
+        println(f"[benchone] $name ($tag) rows=$n wall=$wall%.2f cpu=$cpu%.2f gc_ms=$gc jit_ms=$jit load1m=${load1m()}")
         (wall, cpu, gc, jit)
       }
       val (w, c, g, j) = samples.minBy(_._1)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The training-data twin of `BatchJob`: one schedulable main that
@@ -29,15 +28,7 @@ object CorpusJob {
     val outDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_corpus").toString)
     val nBuckets = args.lift(2).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = Engine.prepare(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

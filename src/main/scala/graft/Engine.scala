@@ -12,6 +12,25 @@ import org.apache.spark.sql.internal.SQLConf
   * point (SparkEntry.queries, Verify, Bench, tests). */
 object Engine {
 
+  /** Cores of a main's local session: `SPARK_GRAFT_CPUS`, else every
+    * available processor. */
+  private[graft] lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session every main runs on: `local[cpus]` with one shuffle
+    * partition per core and the UI off, through `prepare`, logging at
+    * WARN. Tests keep a fixed-size session of their own instead, so
+    * their plans do not follow the host's core count. */
+  def session(): SparkSession = {
+    val spark = prepare(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate())
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Idempotent runtime session config.
     *  - ANSI off: the reference ran Spark 3.x ANSI-off; its cleaning
     *    relies on junk→NULL casts (SURVEY.md quirk Q-j). Spark 4 flips

@@ -79,6 +79,22 @@ object JvmStamp {
     if (sink.get() == Long.MinValue) secs + 1e-12 else secs
   }
 
+  /** [1m, 5m, 15m] host load averages (Linux); empty elsewhere. */
+  def loadAvg(): Seq[Double] =
+    try scala.io.Source.fromFile("/proc/loadavg").mkString
+      .split("\\s+").take(3).map(_.toDouble).toSeq
+    catch { case _: Exception => Seq.empty }
+
+  /** Cumulative CPU nanoseconds of THIS JVM process (all threads —
+    * executor pool included, which is the point: a query's cpu delta
+    * measures work actually scheduled, unaffected by other processes);
+    * -1 where the platform bean is unavailable. */
+  def processCpuNs(): Long =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
+      case _ => -1L
+    }
+
   def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans

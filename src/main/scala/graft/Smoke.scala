@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner: drives the driver's `SparkEntry.entry` contract
   * exactly as the harness does (rows > 0 on sf0.001) and prints the
   * plan so scale posture can be eyeballed per round. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     val df = SparkEntry.entry(spark)
     df.explain("formatted")
     val rows = df.count()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -33,11 +33,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * SPARK_GRAFT_SF_DIR, SPARK_GRAFT_REPLICAS). */
 object StreamBench {
 
-  private def loadAvg(): Seq[Double] =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString
-      .split("\\s+").take(3).map(_.toDouble).toSeq
-    catch { case _: Exception => Seq.empty }
-
   private def r2(v: Double): String = BigDecimal(v)
     .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
 
@@ -47,14 +42,8 @@ object StreamBench {
     val slices = 40
     val filesPerTrigger = 4
     val base = s"/tmp/graft_streambench"
-    val spark = Engine.prepare(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
-    val loadPre = loadAvg()
+    val spark = Engine.session()
+    val loadPre = JvmStamp.loadAvg()
 
     // ---- stage the replay corpus ------------------------------------
     val inDir = s"$base/in"
@@ -296,7 +285,7 @@ object StreamBench {
       results :+ ivfRow :+ nearDupRow :+ fullIngestRow :+ cmsRow :+
         decodeRow :+ cdcCowRow :+ cdcMorRow
 
-    val loadEnd = loadAvg()
+    val loadEnd = JvmStamp.loadAvg()
     def arr(xs: Seq[Double]) = xs.map(r2).mkString("[", ",", "]")
     println(s"""{"metric":"stream_bench","replicas":$replicas,""" +
       s""""staged_rows":$nStaged,"slices":$slices,""" +

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft._
 import graft.ext.Similarity
@@ -16,12 +15,7 @@ import graft.ext.Similarity
 object AnnRecallProbe {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Engine.prepare(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session()
     val emb = spark.read.parquet(s"$d/embeddings.parquet")
     val probes = emb.where(col("vec_id") % 100 === 0)
     val k = 10

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft._
 import graft.ext._
@@ -21,12 +21,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val d = "/root/testdata/sf0.1"
     val out = "/tmp/scaleprobe"
-    val spark = Engine.prepare(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session()
     val copies = Seq(1, 4, 16, 64)
 
     // Cross-copy DISTINCT replication staging lives in Replicas

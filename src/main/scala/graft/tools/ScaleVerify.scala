@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft._
 
@@ -115,12 +115,7 @@ object ScaleVerify {
     val d = "/root/testdata/sf0.1"
     val probeOut = "/tmp/scaleprobe" // replicas shared with ScaleProbe
     val sv = "/tmp/scaleverify"
-    val spark = Engine.prepare(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session()
     val entries =
       if (args.nonEmpty) defaultEntries.filter(args(0).split(",").toSet)
       else defaultEntries

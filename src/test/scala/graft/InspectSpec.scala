@@ -1,0 +1,32 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import graft.tools.Inspect
+
+/** Both `Inspect` modes on the shared session. `Inspect.main` stops the
+  * session it builds, so the tests drive `Inspect.run`. */
+class InspectSpec extends SparkSpec {
+
+  test("plan writes the formatted and the AQE-final plan of an entry") {
+    val dir = Files.createTempDirectory("inspect_plan").toString
+    Inspect.run(spark, sf, Seq("plan", dir, "t", "pin_q1"))
+    val text = Files.readString(Paths.get(dir, "pin_q1_t.txt"))
+    assert(text.contains("== Physical Plan =="))
+    assert(text.contains("== AQE-final executed plan =="))
+  }
+
+  test("prof prints the warm pass header and the exchange census") {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Inspect.run(spark, sf, Seq("prof", "pin_q1")))
+    val text = out.toString("UTF-8")
+    assert(text.contains("==== pin_q1 wall="))
+    assert(text.contains("plan: exchanges="))
+  }
+
+  test("an unknown mode is rejected with the usage text") {
+    val e = intercept[IllegalArgumentException](
+      Inspect.run(spark, sf, Seq("dump", "pin_q1")))
+    assert(e.getMessage == Inspect.usage)
+  }
+}
