@@ -295,13 +295,9 @@ object Bench {
     // warm sample of a cached plan compiles nothing; a nonzero second
     // sample means the generated-class cache thrashed).
     val timed = SparkEntry.benchQueries.map { case (name, fn) =>
-      // Standalone-entry honesty (r18 verdict item 2): drop pins
-      // memoised by EARLIER entries before this entry's first sample,
-      // outside the timed region — sample 1 then pays this entry's own
-      // pin builds and min-of-2 measures standalone entry cost rather
-      // than inheriting intermediates from a family sibling. (Sample 2
-      // staying warm within the entry is the same behavior the pre-r18
-      // lazy caches had.)
+      // Release the pin blocks EARLIER entries left stored, outside the
+      // timed region, so no entry runs beside its siblings' pins. Pins
+      // are never reused, so every sample pays its own pin builds.
       graft.ext.Pin.reset()
       val k0 = Engine.codegenCompiles()
       val samples = (1 to 2).map { _ =>
@@ -345,8 +341,8 @@ object Bench {
           val out = results.map { case (name, samples) =>
             if (!candidates(name)) name -> samples
             else name -> (samples ++ (1 to 2).map { i =>
-              // same standalone-entry discipline as the first screen:
-              // the confirmation pair starts from a cold pin registry
+              // same discipline as the first screen: the confirmation
+              // pair starts with no earlier pin blocks stored
               if (i == 1) graft.ext.Pin.reset()
               val g0 = JvmStamp.gcMillis()
               val c0 = JvmStamp.processCpuNs()

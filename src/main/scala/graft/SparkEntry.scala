@@ -56,9 +56,12 @@ object SparkEntry {
       // the measured per-task deserialization floor, paid by all nine
       // pin queries per invocation. The checkpoint stub cuts it;
       // partition count derives from the row count, not the core count.
-      (graft.ext.Pin.sized(t._1, counts(0)),
-        graft.ext.Pin.sized(t._2, counts(1)),
-        graft.ext.Pin.sized(t._3, counts(2)))
+      // Each cache is released once its checkpoint has landed, as
+      // `Pin.eager` does: the stub is the only stored copy.
+      val sized = Seq(t._1, t._2, t._3).zip(counts).map { case (df, n) =>
+        try graft.ext.Pin.sized(df, n) finally df.unpersist()
+      }
+      (sized(0), sized(1), sized(2))
     })
   }
 

@@ -1,8 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Eager, plan-keyed pinning of a shared intermediate (r18).
+/** Eager pinning of a shared intermediate (r18).
   *
   * The round-18 profiling showed two failure modes for "shared"
   * subtrees: (1) Catalyst merges agg-over-agg chains so consumers get
@@ -13,10 +15,9 @@ import org.apache.spark.sql.DataFrame
   *
   * `Pin.eager` persists and immediately materializes, so every
   * consumer — including concurrently-submitted AQE stages — reads the
-  * one materialized copy. The persist stays plan-keyed in the
-  * CacheManager: a later invocation that builds the canonically-equal
-  * frame (same fixture, same operator) substitutes the
-  * already-materialized relation instead of recomputing.
+  * one materialized copy. A pin is a plain value: nothing is memoised,
+  * so every invocation builds its own pins, and an operator that wants
+  * one proxy for two consumers passes the pinned frame to both.
   *
   * On top of the persist, the returned frame is `sized`: lineage
   * truncated (localCheckpoint) and partitions derived from the
@@ -56,40 +57,10 @@ object Pin {
     * longs ≈ tens of MB — the same band AQE's 64 MB advisory targets. */
   private val RowsPerPart = 2L * 1000 * 1000
 
-  /** Session-scoped registry of built pins, keyed by the canonicalized
-    * analyzed plan AND the output field names — the same plan-keyed
-    * reuse the CacheManager gave the persist-only pins (a later
-    * invocation building the canonically-equal frame gets the
-    * materialized proxy instead of recomputing), now serving the sized
-    * CHECKPOINT so the reuse and the lineage truncation compose.
-    * Without it, every invocation re-ran the count+coalesce+checkpoint
-    * build (two jobs per pin), a measured +0.3–0.5 s on pin-dense
-    * cheap entries (cluster_top_terms 0.63 → 1.07 s).
-    *
-    * The field names are part of the key because canonicalization
-    * normalizes attribute NAMES away: two pins that differ only in
-    * output aliases (lmQuality's `(doc_id,tok,cnt)` counts vs
-    * tfidfTopTerms' `(doc_id,tok,tf)`) canonicalize identically, and
-    * a plan-only key hands one operator the other's frame — `col("tf")`
-    * then fails to resolve (the r18 regression that dropped
-    * tfidf_top_terms). Same canonical plan + same names ⇒ same frame,
-    * so the composite key is sound.
-    *
-    * Bounded (MaxEntries): pins are small proxies, but a long-lived
-    * session (a 100 TB campaign driving thousands of operator
-    * invocations over changing inputs) must not accumulate checkpoint
-    * storage without limit — on overflow the registry is cleared and
-    * the dropped frames' checkpoint RDDs are released to the
-    * ContextCleaner (correctness is unaffected; the next use rebuilds).
-    * Entries die with the session; memory is one sized proxy per
-    * distinct pin plan — the same footprint the CacheManager previously
-    * held, which the build now releases (unpersist after the
-    * checkpoint materializes). */
-  private val MaxEntries = 512
-  private val reg = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Seq[String]), DataFrame]
+  /** Name given to the checkpoint RDD behind every `eager` pin: `reset`
+    * releases exactly these, never a caller's own `sized` or
+    * `localCheckpoint` frames. */
+  private[graft] val Tag = "graft.ext.Pin.eager"
 
   /** Plan-shape test support: run `f` with `eager` as the identity, so
     * a PlanSpec assertion sees the FULL logical tree — including the
@@ -109,41 +80,32 @@ object Pin {
     try f finally disabled.set(prev)
   }
 
-  /** Drop every memoised pin and release its checkpoint blocks. Called
-    * by the bench harnesses BETWEEN entries/passes (never inside a
-    * timed region) so each entry's first sample pays its own pin
-    * builds — min-of-2 then measures standalone entry cost instead of
-    * inheriting intermediates built by an earlier entry in the same
-    * family (r18 verdict item 2). Without the release, the blocks
-    * stayed until the ContextCleaner happened to collect the dropped
-    * frames (`getPersistentRDDs` grew by 3 per corpus pass). A frame
+  /** Release the checkpoint blocks of every live `eager` pin in the
+    * active session. Called by the bench harnesses BETWEEN
+    * entries/passes (never inside a timed region), so blocks do not
+    * wait for the ContextCleaner to collect the dropped frames. A frame
     * obtained from `eager` before the reset must not be used after it:
     * its lineage is cut, so it cannot recompute the released blocks. */
-  def reset(): Unit = {
-    val dropped = reg.values.toSeq
-    reg.clear()
-    dropped.foreach(checkpointRdd(_).foreach(_.unpersist(blocking = true)))
-  }
+  def reset(): Unit =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(s => pinRdds(s.sparkContext).foreach(_.unpersist(blocking = true)))
+
+  /** The persisted checkpoint RDDs of the live `eager` pins. */
+  private[graft] def pinRdds(sc: SparkContext): Seq[RDD[_]] =
+    sc.getPersistentRDDs.values.filter(_.name == Tag).toSeq
 
   /** The locally checkpointed RDD behind a frame `sized` returned. */
-  private[graft] def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+  private[graft] def checkpointRdd(df: DataFrame): Option[RDD[_]] =
     df.queryExecution.logical.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }
 
   def eager(df: DataFrame): DataFrame = {
     if (disabled.get) return df
-    val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized,
-      df.schema.fieldNames.toSeq)
-    reg.getOrElseUpdate(key, {
-      // overflow drops references only: a caller may still hold an
-      // earlier pin, so its blocks are left to the ContextCleaner
-      if (reg.size >= MaxEntries) reg.clear()
-      df.persist()
-      val out = sized(df, df.count())
-      df.unpersist()
-      out
-    })
+    df.persist()
+    val out = try sized(df, df.count()) finally df.unpersist()
+    checkpointRdd(out).foreach(_.setName(Tag))
+    out
   }
 
   /** Truncate lineage and right-size partitions of an

@@ -73,12 +73,12 @@ object Similarity {
     * the r19 stage profile showed 2–3 identical 64-task quantize
     * stages per entry (ann_sq_topk 2 × ~15 s run, ann_ivfpq_residual
     * 3 × ~2 s). One eager pin makes every consumer a checkpoint-scan
-    * read; because the pin is plan-keyed, composed operators
-    * (ivfPqRerank = ivfPqTopK + exact re-rank) share ONE build within
-    * an invocation. The proxy is the narrow (vec_id, q, nq) index
-    * shape — linear in the corpus with a small constant, the same
-    * class as knnGraph's r18 assignment pin; media/text payloads are
-    * never pinned. Batch-only call sites (localCheckpoint is illegal
+    * read; composed operators (ivfPqRerank = ivfPqTopK + exact
+    * re-rank) pin once and pass the pinned frame on, so they share ONE
+    * build within an invocation. The proxy is the narrow
+    * (vec_id, q, nq) index shape — linear in the corpus with a small
+    * constant, the same class as knnGraph's r18 assignment pin;
+    * media/text payloads are never pinned. Batch-only call sites (localCheckpoint is illegal
     * in streaming plans; the streaming assignment path keeps the
     * unpinned `quantizedWithNorm`). */
   private def quantizedPinned(emb: DataFrame): DataFrame =
@@ -484,14 +484,18 @@ object Similarity {
     * Full-precision re-rank of the k·|probes| survivors (standard
     * practice) is a separate `bruteForceTopK`-style sliver. */
   def ivfPqTopK(emb: DataFrame, probes: DataFrame, k: Int = 5,
-      nprobe: Int = 3, m: Int = 4, centroidMod: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      nprobe: Int = 3, m: Int = 4, centroidMod: Int = 50): DataFrame =
     // pinned (r19): before, the corpus was scan+quantized THREE times
     // per invocation (centroid pack, codebook training, index
     // projection); every consumer now reads the one pinned proxy —
     // the codebook input derives FROM the pin (same q column) instead
     // of re-quantizing the raw embeddings
-    val e = quantizedPinned(emb)
+    ivfPqTopKOn(quantizedPinned(emb), probes, k, nprobe, m, centroidMod)
+
+  /** `ivfPqTopK` over an already pinned (vec_id, q, nq) corpus. */
+  private def ivfPqTopKOn(e: DataFrame, probes: DataFrame, k: Int,
+      nprobe: Int, m: Int, centroidMod: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val cents = e.where(col("vec_id") % centroidMod === 0)
       .select(col("vec_id").as("cent_id"), col("q").as("cq"), col("nq").as("ncq"))
     val centPack = cents.agg(collect_list(
@@ -727,13 +731,13 @@ object Similarity {
     // caller that filters weak edges first leaves dst-only nodes,
     // which a src-only node set would silently drop from the ranking
     // (and from n, skewing the teleport base)
-    // eager pin (r18, registry-keyed r19): the loop below references
-    // `nodes` once per iteration — a persisted-only node set ships its
-    // full lineage in every iteration task's binary (the measured
-    // ~0.2 s/task deserialization floor); the checkpoint stub doesn't.
-    // The r18 persist+count+Pin.sized build also leaked the persist
-    // and re-ran on every invocation; the count below reads the
-    // checkpointed stub (single narrow partition at proxy scale).
+    // eager pin (r18): the loop below references `nodes` once per
+    // iteration — a persisted-only node set ships its full lineage in
+    // every iteration task's binary (the measured ~0.2 s/task
+    // deserialization floor); the checkpoint stub doesn't.
+    // Pin.eager releases its persist once the checkpoint lands; the
+    // count below reads the checkpointed stub (single narrow partition
+    // at proxy scale).
     val nodes = Pin.eager(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
     val n = nodes.count()
@@ -958,43 +962,39 @@ object Similarity {
     require(k >= 1, "k must be positive")
     val spark = emb.sparkSession
     import spark.implicits._
-    // eager pin (r18, registry-keyed r19): the k selection passes each
-    // scan this frame — cached-only, every pass's tasks
-    // re-deserialized the quantize lineage (6 × 64-task collect jobs
-    // for KB-scale picks); the r18 cache+Pin.sized build additionally
-    // re-ran on every invocation
+    // eager pin (r18): the k selection passes each scan this frame —
+    // cached-only, every pass's tasks re-deserialized the quantize
+    // lineage (6 × 64-task collect jobs for KB-scale picks)
     val e = Pin.eager(
       emb.select(col("vec_id"), quantize(col("embedding")).as("q")))
-    try {
-      val seedRows = e.orderBy(col("vec_id").asc).limit(1).collect()
-      if (seedRows.isEmpty)
-        // empty corpus slice: an empty typed result, not an opaque
-        // ArrayIndexOutOfBounds from the driver-side seed access
-        return Seq.empty[(Long, Long, Long)]
-          .toDF("sel_rank", "vec_id", "dist")
-      val seed = seedRows(0)
-      val sel = scala.collection.mutable.ArrayBuffer[(Long, Array[Long], Long)](
-        (seed.getLong(0), seed.getSeq[Long](1).toArray, 0L))
-      var exhausted = false
-      for (_ <- 2 to k if !exhausted) {
-        val packed = sel.toSeq
-          .map { case (id, q, _) => (id, q, q.map(x => x * x).sum) }
-          .toDF("cluster", "cq", "cqq")
-          .agg(collect_list(struct(col("cluster"), col("cq"), col("cqq"))).as("cs"))
-        val far = e.crossJoin(broadcast(packed))
-          .select(col("vec_id"), col("q"),
-            graft.functions.NearestCentroidL2.nearestL2(col("q"), col("cs"))
-              .getField("d").as("d"))
-          .agg(max_by(struct(col("vec_id"), col("q"), col("d")),
-            struct(col("d"), (-col("vec_id")).as("nv"))).as("m"))
-          .select(col("m.vec_id"), col("m.q"), col("m.d")).collect()(0)
-        if (far.getLong(2) == 0L) exhausted = true
-        else sel += ((far.getLong(0), far.getSeq[Long](1).toArray, far.getLong(2)))
-      }
-      sel.toSeq.zipWithIndex
-        .map { case ((id, _, d), i) => (i + 1L, id, d) }
+    val seedRows = e.orderBy(col("vec_id").asc).limit(1).collect()
+    if (seedRows.isEmpty)
+      // empty corpus slice: an empty typed result, not an opaque
+      // ArrayIndexOutOfBounds from the driver-side seed access
+      return Seq.empty[(Long, Long, Long)]
         .toDF("sel_rank", "vec_id", "dist")
-    } finally { () } // pin lifetime is registry-managed
+    val seed = seedRows(0)
+    val sel = scala.collection.mutable.ArrayBuffer[(Long, Array[Long], Long)](
+      (seed.getLong(0), seed.getSeq[Long](1).toArray, 0L))
+    var exhausted = false
+    for (_ <- 2 to k if !exhausted) {
+      val packed = sel.toSeq
+        .map { case (id, q, _) => (id, q, q.map(x => x * x).sum) }
+        .toDF("cluster", "cq", "cqq")
+        .agg(collect_list(struct(col("cluster"), col("cq"), col("cqq"))).as("cs"))
+      val far = e.crossJoin(broadcast(packed))
+        .select(col("vec_id"), col("q"),
+          graft.functions.NearestCentroidL2.nearestL2(col("q"), col("cs"))
+            .getField("d").as("d"))
+        .agg(max_by(struct(col("vec_id"), col("q"), col("d")),
+          struct(col("d"), (-col("vec_id")).as("nv"))).as("m"))
+        .select(col("m.vec_id"), col("m.q"), col("m.d")).collect()(0)
+      if (far.getLong(2) == 0L) exhausted = true
+      else sel += ((far.getLong(0), far.getSeq[Long](1).toArray, far.getLong(2)))
+    }
+    sel.toSeq.zipWithIndex
+      .map { case ((id, _, d), i) => (i + 1L, id, d) }
+      .toDF("sel_rank", "vec_id", "dist")
   }
 
   /** Two-stage retrieval — the production ANN serving composition:
@@ -1021,12 +1021,11 @@ object Similarity {
       centroidMod: Int = 50): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(r >= k, "shortlist depth r must be >= k")
-    val shortlist = ivfPqTopK(emb, probes, k = r, nprobe, m, centroidMod)
-      .select(col("probe_id"), col("vec_id"))
-    // pinned (r19): plan-keyed, so this is the SAME registry entry
-    // ivfPqTopK just built — the exact re-rank reads the one proxy
-    // instead of re-quantizing the corpus a second time
+    // one pin for both stages: the shortlist and the exact re-rank
+    // read the same proxy instead of quantizing the corpus twice
     val e = quantizedPinned(emb)
+    val shortlist = ivfPqTopKOn(e, probes, k = r, nprobe, m, centroidMod)
+      .select(col("probe_id"), col("vec_id"))
     val p = quantizedWithNorm(probes)
       .select(col("vec_id").as("probe_id"), col("q").as("pq"),
         col("nq").as("npq"))

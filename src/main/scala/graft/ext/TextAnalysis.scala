@@ -1105,12 +1105,11 @@ object TextAnalysis {
     * counts-collapsed chain does the heavy lifting once. */
   def lmQualityBuckets(docs: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    // eager pin (r18, registry-keyed r19): the cuts/moments branch and
-    // the bucket join would otherwise each re-execute the whole
-    // lmQuality chain (measured 2× op cost — the clusterTopTerms
-    // double-build shape), and a lazy cache is raced by AQE's
-    // concurrent stage materialization. Pin.eager replaces the r18
-    // cache+count+Pin.sized build, which re-ran on every invocation.
+    // eager pin (r18): the cuts/moments branch and the bucket join
+    // would otherwise each re-execute the whole lmQuality chain
+    // (measured 2× op cost — the clusterTopTerms double-build shape),
+    // and a lazy cache is raced by AQE's concurrent stage
+    // materialization.
     val lq = Pin.eager(lmQuality(docs)
       .withColumn("q_doc",
         round(col("sum_q_logprob").cast("double")
@@ -1129,7 +1128,7 @@ object TextAnalysis {
         element_at(col("__c"), 1).as("cut_lo"),
         element_at(col("__c"), 2).as("cut_hi"),
         col("s1"), col("s2"))
-    val out = lq.join(broadcast(stats), "source")
+    lq.join(broadcast(stats), "source")
       .withColumn("mean_q",
         col("s1").cast("double") / col("n_docs").cast("double"))
       .withColumn("var_q",
@@ -1146,10 +1145,6 @@ object TextAnalysis {
           .when(col("q_doc").cast("double") >= col("cut_lo"), "middle")
           .otherwise("tail").as("ccnet_bucket"))
       .localCheckpoint()
-    // lq stays persisted (r18): unpersisting here forfeited the
-    // plan-keyed reuse a repeated invocation gets from the
-    // CacheManager; the frame is the narrow per-doc quality proxy.
-    out
   }
 
   /** TF-IDF top terms per document — the classic distinctive-term
@@ -2091,10 +2086,7 @@ object TextAnalysis {
     // dedup under AQE's concurrent stage materialization — the token
     // branches race before any partition lands and each re-runs the
     // tokenize (3 duplicate count-exchange map stages measured); the
-    // eager build makes every branch a checkpoint-stub read. r19 moved
-    // it from Pin.sized (per-invocation rebuild: the tokenize+count
-    // build re-ran on every invocation, the operator's dominant
-    // remaining stage) to the registry-keyed Pin.eager. The
+    // eager build makes every branch a checkpoint-stub read. The
     // materialize=false plan-inspection hook keeps the r17
     // cache-then-derive shape PlanSpec pins (a checkpoint stub would
     // hide the branches' shared read from the plan).
@@ -2110,9 +2102,8 @@ object TextAnalysis {
       .join(lengthQuantiles(docs).select(col("source"), col("n_docs"),
         col("p50_tokens"), col("p90_tokens"), col("p99_tokens")), "source")
     if (!materialize) return lazyOut
-    // the sc proxy lives in the pin registry (vocabulary-bounded);
     // the RESULT is checkpointed but never memoised — every invocation
-    // recomputes the report from the pinned counts
+    // recomputes the report from freshly pinned counts
     lazyOut.localCheckpoint()
   }
 

@@ -1,13 +1,16 @@
 package graft.tools
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.executor.TaskMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
+  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.storage.RDDBlockId
 import graft.{Engine, SparkEntry}
+import graft.ext.Pin
 
 /** Plan and stage inspection of `SparkEntry.queries` entries on
   * SPARK_GRAFT_SF_DIR (default sf0.1). Two modes:
@@ -25,7 +28,8 @@ import graft.{Engine, SparkEntry}
   * fill); pass 2 is measured with a fresh stage buffer, so the printout
   * is the warm per-stage cost of exactly one execution: stage wall
   * (completion − submission), task count, summed executor run/cpu and
-  * deserialization time, shuffle bytes, and the callsite name. Jobs
+  * deserialization time, shuffle bytes, and the callsite name, then
+  * the `Pin.eager` pins that pass built and their stored bytes. Jobs
   * are counted to expose eager-materialization chatter (each
   * count/localCheckpoint/AQE materialization is its own job), and
   * Janino compiles to expose generated-class cache misses. */
@@ -56,7 +60,7 @@ object Inspect {
       // execute once so AQE's final plan is available alongside the
       // initial formatted plan (explain prints the pre-execution tree;
       // the executed plan carries the AQE-final join strategies)
-      df.count()
+      execute(df)
       val formatted =
         df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       val executed = df.queryExecution.executedPlan.toString
@@ -72,14 +76,33 @@ object Inspect {
     }
   }
 
+  /** Run `df`'s own query execution. `df.count()` would plan and run a
+    * separate aggregate query, leaving `df.queryExecution.executedPlan`
+    * at `isFinalPlan=false`. */
+  private def execute(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
   private case class Stage(id: Int, name: String, wallMs: Long, tasks: Int,
       runMs: Long, cpuMs: Long, deserMs: Long, deserCpuMs: Long,
       shRead: Long, shWrite: Long)
 
-  /** Jobs started and stages completed since the last `reset`. */
+  /** Jobs started, stages completed and `Pin.eager` pins read since the
+    * last `reset`. A pin is counted when a stage reads its tagged
+    * checkpoint RDD, and its bytes are those of its stored blocks: the
+    * live RDD itself may already be garbage when the pass ends (an
+    * entry that checkpoints its result drops its pins). */
   private class StageLog extends SparkListener {
     private val stages = ArrayBuffer.empty[Stage]
     private var jobs = 0
+    private val pins = mutable.Set.empty[Int]
+    private val blockBytes = mutable.Map.empty[RDDBlockId, Long]
+
+    override def onBlockUpdated(ev: SparkListenerBlockUpdated): Unit = {
+      val b = ev.blockUpdatedInfo
+      b.blockId.asRDDId.foreach { id =>
+        val n = b.memSize + b.diskSize
+        if (n > 0) synchronized { blockBytes(id) = n }
+      }
+    }
 
     override def onJobStart(j: SparkListenerJobStart): Unit =
       synchronized { jobs += 1 }
@@ -97,11 +120,18 @@ object Inspect {
         m(_.executorDeserializeCpuTime / 1000000),
         m(_.shuffleReadMetrics.totalBytesRead),
         m(_.shuffleWriteMetrics.bytesWritten))
-      synchronized { stages += st }
+      val read = si.rddInfos.filter(_.name == Pin.Tag).map(_.id)
+      synchronized { stages += st; pins ++= read }
     }
 
-    def reset(): Unit = synchronized { stages.clear(); jobs = 0 }
+    def reset(): Unit = synchronized {
+      stages.clear(); jobs = 0; pins.clear(); blockBytes.clear()
+    }
     def snapshot(): (Vector[Stage], Int) = synchronized { (stages.toVector, jobs) }
+    /** (pins read, their stored bytes) */
+    def pinBuilds(): (Int, Long) = synchronized {
+      (pins.size, blockBytes.collect { case (id, n) if pins(id.rddId) => n }.sum)
+    }
   }
 
   private def prof(spark: SparkSession, sfDir: String,
@@ -111,17 +141,18 @@ object Inspect {
     try names.foreach { name =>
       val fn = SparkEntry.queries(name)
       // warm pass: plan compile + caches
-      fn(spark, sfDir).count()
+      execute(fn(spark, sfDir))
       Thread.sleep(300) // drain listener bus
       log.reset()
       val k0 = Engine.codegenCompiles()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
-      df.count()
+      execute(df)
       val wall = (System.nanoTime() - t0) / 1e9
       val compiles = Engine.codegenCompiles() - k0
       Thread.sleep(300) // drain listener bus
       val (stages, jobs) = log.snapshot()
+      val (pins, pinBytes) = log.pinBuilds()
       println(f"==== $name wall=$wall%.3f s jobs=$jobs stages=${stages.size} stageWallSum=${stages.map(_.wallMs).sum / 1000.0}%.3f s compiles=$compiles")
       stages.sortBy(-_.wallMs).take(30).foreach { s =>
         println(f"  [${s.id}%4d] ${s.wallMs}%6d ms tasks=${s.tasks}%3d run=${s.runMs}%6d cpu=${s.cpuMs}%6d deser=${s.deserMs}%6d dcpu=${s.deserCpuMs}%6d shR=${s.shRead}%9d shW=${s.shWrite}%9d ${s.name}")
@@ -131,6 +162,7 @@ object Inspect {
       val nEx = "Exchange".r.findAllIn(plan).size
       val nSort = "(?m)^\\s*[+:]?-?\\s*\\*?\\(?\\d*\\)?\\s*Sort ".r.findAllIn(plan).size
       println(s"  plan: exchanges=$nEx sorts=$nSort")
+      println(s"  pins: builds=$pins bytes=$pinBytes")
     } finally spark.sparkContext.removeSparkListener(log)
   }
 }

@@ -645,14 +645,12 @@ class ExtSpec extends SparkSpec {
     assert(pr20.length == cut.length)
     val total = pr20.map(_.getLong(1)).sum
     assert(total <= 1000000000000L && total >= 1000000000000L - 100L * pr20.length)
-    // r18 contract change: the edge/node/assignment pins now STAY
-    // persisted (Pin.eager) so a repeated invocation substitutes the
-    // materialized frames via the CacheManager instead of re-running
-    // the kNN build. The three structurally distinct pinned frames
-    // (assigned, edges, nodes) register once each — canonically equal
-    // plans across the three runs above must NOT add further entries.
+    // Pin.eager releases each pin's persist once its checkpoint lands,
+    // so the three runs above leave only checkpoint RDDs (excluded
+    // above) stored: repeated invocations must NOT grow the
+    // non-checkpoint set.
     assert(cachedCount <= cachedBefore + 3,
-      s"pins must stay plan-keyed (no per-invocation growth): $cachedBefore -> $cachedCount")
+      s"no per-invocation growth of non-checkpoint persisted RDDs: $cachedBefore -> $cachedCount")
   }
 
   test("Pin.reset releases every dropped pin's checkpoint blocks; withDisabled nests") {
@@ -677,6 +675,57 @@ class ExtSpec extends SparkSpec {
     val pinned = Pin.eager(df)
     assert(!(pinned eq df) && Pin.checkpointRdd(pinned).nonEmpty)
     Pin.reset()
+  }
+
+  test("Pin.reset leaves Pin.sized and plain localCheckpoint frames readable") {
+    import graft.ext.Pin
+    val sc = spark.sparkContext
+    Pin.reset()
+    val sized = Pin.sized(spark.range(20).toDF("id"), 20)
+    val plain = spark.range(30).toDF("id").localCheckpoint()
+    val pinned = Pin.eager(spark.range(40).toDF("id"))
+    assert(Pin.pinRdds(sc).map(_.id).toSet ==
+      Pin.checkpointRdd(pinned).map(_.id).toSet, "only the eager pin is tagged")
+    Pin.reset()
+    assert(Pin.pinRdds(sc).isEmpty)
+    assert(sized.count() == 20 && plain.count() == 30)
+  }
+
+  test("Pin.eager: alias-different twins over one plan each resolve their own columns") {
+    import graft.ext.Pin
+    val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    val cnt = Pin.eager(toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("cnt")))
+    val tf = Pin.eager(toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))
+    assert(cnt.columns.toSeq == Seq("doc_id", "tok", "cnt"))
+    assert(tf.columns.toSeq == Seq("doc_id", "tok", "tf"))
+    assert(cnt.agg(sum(col("cnt"))).head().getLong(0) ==
+      tf.agg(sum(col("tf"))).head().getLong(0))
+    Pin.reset()
+  }
+
+  test("ivfPqRerank builds one pin per invocation: both stages share it") {
+    import graft.ext.Pin
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val probes = emb.where(col("vec_id") % 100 === 0)
+    Pin.reset()
+    val out = Similarity.ivfPqRerank(emb, probes, k = 3, r = 8, nprobe = 2)
+    assert(out.collect().nonEmpty)
+    assert(Pin.pinRdds(spark.sparkContext).size == 1)
+    Pin.reset()
+  }
+
+  test("lmQuality: two concurrent invocations on one session equal the serial result") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val fixture = spark.read.parquet(s"$sf/documents.parquet")
+    def run(): Seq[(Long, Long, Long)] = TextAnalysis.lmQuality(fixture)
+      .select("doc_id", "n_tokens", "sum_q_logprob").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    val serial = run()
+    val both = Seq.fill(2)(Future(run())).map(Await.result(_, 5.minutes))
+    assert(serial.nonEmpty && both.forall(_ == serial))
+    graft.ext.Pin.reset()
   }
 
   test("dsirSelect/tokenizerFertility/contrastiveCrops: structure and determinism") {

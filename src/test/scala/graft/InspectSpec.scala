@@ -14,6 +14,8 @@ class InspectSpec extends SparkSpec {
     val text = Files.readString(Paths.get(dir, "pin_q1_t.txt"))
     assert(text.contains("== Physical Plan =="))
     assert(text.contains("== AQE-final executed plan =="))
+    val aqeFinal = text.substring(text.indexOf("== AQE-final executed plan =="))
+    assert(aqeFinal.contains("isFinalPlan=true"))
   }
 
   test("prof prints the warm pass header and the exchange census") {
@@ -22,6 +24,7 @@ class InspectSpec extends SparkSpec {
     val text = out.toString("UTF-8")
     assert(text.contains("==== pin_q1 wall="))
     assert(text.contains("plan: exchanges="))
+    assert(text.contains("pins: builds="))
   }
 
   test("an unknown mode is rejected with the usage text") {

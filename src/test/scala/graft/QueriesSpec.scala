@@ -19,6 +19,19 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.benchQueries.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("warming the cleaned tables stores only their checkpoint stubs") {
+    // a fresh fixture dir, so this test's warm-up is the first
+    val dir = java.nio.file.Files.createTempDirectory("warm_tables")
+    Seq("orders", "customer", "nation").foreach(t => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet")))
+    def cached: Set[Int] = spark.sparkContext.getPersistentRDDs.values
+      .filter(!_.isCheckpointed).map(_.id).toSet
+    val before = cached
+    SparkEntry.warmTables(spark, dir.toString)
+    assert((cached -- before).isEmpty,
+      "the cleaning caches must be released once their checkpoints land")
+  }
+
   test("Q1 keeps exactly the rank-1 categories per country") {
     val out = PinQueries.q1(pin, geo)
     val top = out.groupBy("country").agg(max("category_count").as("m"),
