@@ -37,31 +37,27 @@ object SparkEntry {
       // re-sorted away by every downstream query; the *_clean dump
       // entries order explicitly themselves.
       val (rp, rg, ru) = graft.pipeline.RawDerive.tables(spark, sfDir)
-      val t = (Cleaning.cleanPin(rp, sort = false).cache(),
-        Cleaning.cleanGeo(rg, sort = false).cache(),
-        Cleaning.cleanUser(ru, sort = false).cache())
-      // Materialize the three caches CONCURRENTLY: independent DAGs,
-      // one scheduler — the cluster pipelines their stages instead of
-      // idling between three sequential first-touch materializations.
-      // (Spark job submission is thread-safe; this is the standard
-      // multi-job driver pattern.)
+      // Build the three tables CONCURRENTLY: independent DAGs, one
+      // scheduler — the cluster pipelines their stages instead of
+      // idling between three sequential builds. (Spark job submission
+      // is thread-safe; this is the standard multi-job driver pattern.)
+      // Each is checkpointed like the operator pins (r18): a cached-only
+      // table keeps the full derive+clean plan in every consumer task's
+      // binary — the measured per-task deserialization floor, paid by
+      // all nine pin queries per invocation. The checkpoint stub cuts
+      // it, its partition count derives from the row count, not the
+      // core count, and it is the only stored copy. `kept`, not
+      // `eager`: `Pin.reset` between bench entries must not release
+      // the session's tables.
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
-      val counts = Seq(t._1, t._2, t._3)
-        .map(df => Future(df.count()))
+      val t = Seq(Cleaning.cleanPin(rp, sort = false),
+        Cleaning.cleanGeo(rg, sort = false),
+        Cleaning.cleanUser(ru, sort = false))
+        .map(df => Future(graft.ext.Pin.kept(df)))
         .map(Await.result(_, Duration.Inf))
-      // sized like the operator pins (r18): a cached-only table keeps
-      // the full derive+clean plan in every consumer task's binary —
-      // the measured per-task deserialization floor, paid by all nine
-      // pin queries per invocation. The checkpoint stub cuts it;
-      // partition count derives from the row count, not the core count.
-      // Each cache is released once its checkpoint has landed, as
-      // `Pin.eager` does: the stub is the only stored copy.
-      val sized = Seq(t._1, t._2, t._3).zip(counts).map { case (df, n) =>
-        try graft.ext.Pin.sized(df, n) finally df.unpersist()
-      }
-      (sized(0), sized(1), sized(2))
+      (t(0), t(1), t(2))
     })
   }
 

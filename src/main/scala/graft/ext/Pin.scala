@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftx.Checkpoint
 
 /** Eager pinning of a shared intermediate (r18).
   *
@@ -13,16 +14,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * stages are submitted concurrently, race the cold cache before any
   * partition lands, and each recomputes the upstream pipeline.
   *
-  * `Pin.eager` persists and immediately materializes, so every
-  * consumer — including concurrently-submitted AQE stages — reads the
-  * one materialized copy. A pin is a plain value: nothing is memoised,
-  * so every invocation builds its own pins, and an operator that wants
-  * one proxy for two consumers passes the pinned frame to both.
+  * `Pin.eager` materializes immediately, so every consumer — including
+  * concurrently-submitted AQE stages — reads the one materialized copy.
+  * A pin is a plain value: nothing is memoised, so every invocation
+  * builds its own pins, and an operator that wants one proxy for two
+  * consumers passes the pinned frame to both.
   *
-  * On top of the persist, the returned frame is `sized`: lineage
-  * truncated (localCheckpoint) and partitions derived from the
-  * materialized row count. Profiling this round (jstack sampling of
-  * the executor pool) attributed the dominant CPU of every post-pin
+  * A pin is built in one pass (`graftx.Checkpoint.local`): the frame is
+  * planned once, its rows are locally checkpointed, and the one job
+  * that stores them also counts them. The returned frame is then
+  * `sized`: it scans the checkpoint, so its lineage is truncated, and
+  * its partitions are coalesced to the counted rows, a narrow step that
+  * runs no job. Profiling in r18 (jstack sampling of the executor
+  * pool) attributed the dominant CPU of every post-pin
   * stage to `ObjectInputStream.readObject` — task-binary
   * deserialization: a persisted frame keeps its FULL upstream plan in
   * the serialized RDD graph, so each downstream task paid ~0.2 s just
@@ -33,7 +37,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scale-adaptive (rows / rowsPerPart), never a core-count constant:
   * at 100 TB a billion-row proxy still fans out to hundreds of
   * partitions, while a KB-sized one stops paying 32 tasks of fixed
-  * deserialization cost per consumer stage.
+  * deserialization cost per consumer stage. The frame's statistics
+  * are the exact row count and the checkpoint's stored bytes, so a
+  * consumer's broadcast decision sees the real size.
   *
   * Use ONLY on lightweight proxies (counts-collapsed tables,
   * signatures, thumbnails, assignments — guide §8 "decide with small
@@ -50,8 +56,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pin is a cheap-to-rebuild proxy inside one job; a deployment that
   * needs mid-job executor-loss recovery should swap `localCheckpoint`
   * for a reliable `checkpoint` (requires `setCheckpointDir` on
-  * durable storage — one-line change in `sized`), paying a
-  * write-to-storage per pin build. */
+  * durable storage — one-line change in `graftx.Checkpoint.local`),
+  * paying a write-to-storage per pin build. */
 object Pin {
   /** Narrow proxy rows per checkpoint partition: ~2M rows of a few
     * longs ≈ tens of MB — the same band AQE's 64 MB advisory targets. */
@@ -61,6 +67,10 @@ object Pin {
     * releases exactly these, never a caller's own `sized` or
     * `localCheckpoint` frames. */
   private[graft] val Tag = "graft.ext.Pin.eager"
+
+  /** Name of the SQL execution, and call site of the jobs and stages,
+    * that build an `eager` pin. */
+  private[graft] val BuildName = "Pin.eager"
 
   /** Plan-shape test support: run `f` with `eager` as the identity, so
     * a PlanSpec assertion sees the FULL logical tree — including the
@@ -100,22 +110,35 @@ object Pin {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }
 
-  def eager(df: DataFrame): DataFrame = {
-    if (disabled.get) return df
-    df.persist()
-    val out = try sized(df, df.count()) finally df.unpersist()
-    checkpointRdd(out).foreach(_.setName(Tag))
-    out
-  }
+  def eager(df: DataFrame): DataFrame =
+    if (disabled.get) df else build(df, BuildName, Some(Tag))
 
-  /** Truncate lineage and right-size partitions of an
-    * already-materialized proxy: downstream task binaries then carry a
-    * checkpoint-scan stub instead of the full upstream plan. */
+  /** `eager` for a frame its caller keeps: untagged, so `reset` never
+    * releases it, and built even under `withDisabled`. */
+  def kept(df: DataFrame): DataFrame = build(df, "Pin.kept", None)
+
+  /** Checkpoint `df` in one pass, truncating its lineage, and coalesce
+    * it to `rows` / `rowsPerPart` partitions: downstream task binaries
+    * then carry a checkpoint-scan stub instead of the full upstream
+    * plan. Untagged, like `kept`. */
   def sized(df: DataFrame, rows: Long,
       rowsPerPart: Long = RowsPerPart): DataFrame = {
-    val cur = math.max(df.rdd.getNumPartitions, 1)
+    val (frame, rdd, _) = Checkpoint.local(df, "Pin.sized", None)
+    coalesced(frame, rdd, rows, rowsPerPart)
+  }
+
+  private def build(df: DataFrame, name: String,
+      tag: Option[String]): DataFrame = {
+    val (frame, rdd, rows) = Checkpoint.local(df, name, tag)
+    coalesced(frame, rdd, rows, RowsPerPart)
+  }
+
+  /** `frame` coalesced to min(its partitions, ceil(rows / rowsPerPart)). */
+  private def coalesced(frame: DataFrame, rdd: RDD[_], rows: Long,
+      rowsPerPart: Long): DataFrame = {
+    val cur = math.max(rdd.getNumPartitions, 1)
     val parts = math.max(1L,
       math.min(cur.toLong, (rows + rowsPerPart - 1) / rowsPerPart)).toInt
-    (if (parts < cur) df.coalesce(parts) else df).localCheckpoint()
+    if (parts < cur) frame.coalesce(parts) else frame
   }
 }

@@ -548,6 +548,18 @@ object TxLog {
     x.length < y.length
   }
 
+  /** A footer reader for the parquet file at `path`, with its read
+    * options taken from `conf`. `ParquetFileReader.open(InputFile)`
+    * alone builds its options from a fresh Hadoop `Configuration`,
+    * which re-parses the default resources and scans the classpath
+    * for `core-site.xml` on every file. */
+  private def openFooter(conf: org.apache.hadoop.conf.Configuration,
+      path: String): org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+
   /** Per-file min/max/null-count from the freshly written parquet
     * FOOTER — metadata-only (a KB-sized tail read per file, the data
     * pages are never touched), so commit-time stats collection costs
@@ -558,18 +570,14 @@ object TxLog {
     * disqualifies the column → readers conservatively keep the file).
     * An all-null column records kind=allnull — a range predicate can
     * never match it, so the file is pruned outright. Reads through
-    * the caller's (session) Hadoop configuration: a fresh
-    * `Configuration` re-parses the default resources on first use,
-    * about half of a footer read's time. Returns (rowCount, stats). */
+    * the caller's (session) Hadoop configuration, see `openFooter`.
+    * Returns (rowCount, stats). */
   private def footerInfo(conf: org.apache.hadoop.conf.Configuration,
       table: String, file: String): (Long, Map[String, ColStat]) = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(Paths.get(table, file).toString),
-        conf))
+    val reader = openFooter(conf, Paths.get(table, file).toString)
     try {
       // per column: kind, merged (min, max) as canonical strings
       // (None while only all-null chunks seen), null count
@@ -2104,9 +2112,7 @@ object TxLog {
       val expected = org.apache.spark.sql.types.StructType.fromDDL(ddl)
         .fieldNames.map(physicalOf(_, cm)).toSet
       staged.foreach { p =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p.toString), conf))
+        val reader = openFooter(conf, p.toString)
         val names =
           try {
             import scala.jdk.CollectionConverters._
@@ -3145,15 +3151,15 @@ object TxLog {
   def dvSetParts(table: String,
       set: String): Seq[(String, Long, Long, String, String)] = {
     val dir = dvDir(table).resolve(set)
+    val conf = SparkSession.getActiveSession
+      .fold(new org.apache.hadoop.conf.Configuration())(
+        _.sparkContext.hadoopConfiguration)
     if (!Files.isDirectory(dir)) Nil
     else ls(dir).filter(_.getFileName.toString.endsWith(".parquet"))
       .map { p =>
         val (mn, mx) =
           try {
-            val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                new org.apache.hadoop.fs.Path(p.toString),
-                new org.apache.hadoop.conf.Configuration()))
+            val reader = openFooter(conf, p.toString)
             try {
               import scala.jdk.CollectionConverters._
               val blocks = reader.getFooter.getBlocks.asScala

@@ -8,6 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
   SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.storage.RDDBlockId
 import graft.{Engine, SparkEntry}
 import graft.ext.Pin
@@ -29,7 +30,8 @@ import graft.ext.Pin
   * is the warm per-stage cost of exactly one execution: stage wall
   * (completion − submission), task count, summed executor run/cpu and
   * deserialization time, shuffle bytes, and the callsite name, then
-  * the `Pin.eager` pins that pass built and their stored bytes. Jobs
+  * the `Pin.eager` pins that pass built, their stored bytes and the
+  * jobs that built them (their call site is `Pin.BuildName`). Jobs
   * are counted to expose eager-materialization chatter (each
   * count/localCheckpoint/AQE materialization is its own job), and
   * Janino compiles to expose generated-class cache misses. */
@@ -87,12 +89,14 @@ object Inspect {
 
   /** Jobs started, stages completed and `Pin.eager` pins read since the
     * last `reset`. A pin is counted when a stage reads its tagged
-    * checkpoint RDD, and its bytes are those of its stored blocks: the
-    * live RDD itself may already be garbage when the pass ends (an
-    * entry that checkpoints its result drops its pins). */
+    * checkpoint RDD (its build job's stage does), and its bytes are
+    * those of its stored blocks: the live RDD itself may already be
+    * garbage when the pass ends (an entry that checkpoints its result
+    * drops its pins). */
   private class StageLog extends SparkListener {
     private val stages = ArrayBuffer.empty[Stage]
     private var jobs = 0
+    private var pinJobs = 0
     private val pins = mutable.Set.empty[Int]
     private val blockBytes = mutable.Map.empty[RDDBlockId, Long]
 
@@ -104,8 +108,13 @@ object Inspect {
       }
     }
 
-    override def onJobStart(j: SparkListenerJobStart): Unit =
-      synchronized { jobs += 1 }
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      val site = Option(j.properties).map(_.getProperty("callSite.short"))
+      synchronized {
+        jobs += 1
+        if (site.contains(Pin.BuildName)) pinJobs += 1
+      }
+    }
 
     override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
       val si = ev.stageInfo
@@ -125,12 +134,13 @@ object Inspect {
     }
 
     def reset(): Unit = synchronized {
-      stages.clear(); jobs = 0; pins.clear(); blockBytes.clear()
+      stages.clear(); jobs = 0; pinJobs = 0; pins.clear(); blockBytes.clear()
     }
     def snapshot(): (Vector[Stage], Int) = synchronized { (stages.toVector, jobs) }
-    /** (pins read, their stored bytes) */
-    def pinBuilds(): (Int, Long) = synchronized {
-      (pins.size, blockBytes.collect { case (id, n) if pins(id.rddId) => n }.sum)
+    /** (pins read, their stored bytes, jobs that built pins) */
+    def pinBuilds(): (Int, Long, Int) = synchronized {
+      (pins.size, blockBytes.collect { case (id, n) if pins(id.rddId) => n }.sum,
+        pinJobs)
     }
   }
 
@@ -142,7 +152,7 @@ object Inspect {
       val fn = SparkEntry.queries(name)
       // warm pass: plan compile + caches
       execute(fn(spark, sfDir))
-      Thread.sleep(300) // drain listener bus
+      Bridge.drainListenerBus(spark.sparkContext)
       log.reset()
       val k0 = Engine.codegenCompiles()
       val t0 = System.nanoTime()
@@ -150,9 +160,9 @@ object Inspect {
       execute(df)
       val wall = (System.nanoTime() - t0) / 1e9
       val compiles = Engine.codegenCompiles() - k0
-      Thread.sleep(300) // drain listener bus
+      Bridge.drainListenerBus(spark.sparkContext)
       val (stages, jobs) = log.snapshot()
-      val (pins, pinBytes) = log.pinBuilds()
+      val (pins, pinBytes, pinJobs) = log.pinBuilds()
       println(f"==== $name wall=$wall%.3f s jobs=$jobs stages=${stages.size} stageWallSum=${stages.map(_.wallMs).sum / 1000.0}%.3f s compiles=$compiles")
       stages.sortBy(-_.wallMs).take(30).foreach { s =>
         println(f"  [${s.id}%4d] ${s.wallMs}%6d ms tasks=${s.tasks}%3d run=${s.runMs}%6d cpu=${s.cpuMs}%6d deser=${s.deserMs}%6d dcpu=${s.deserCpuMs}%6d shR=${s.shRead}%9d shW=${s.shWrite}%9d ${s.name}")
@@ -162,7 +172,7 @@ object Inspect {
       val nEx = "Exchange".r.findAllIn(plan).size
       val nSort = "(?m)^\\s*[+:]?-?\\s*\\*?\\(?\\d*\\)?\\s*Sort ".r.findAllIn(plan).size
       println(s"  plan: exchanges=$nEx sorts=$nSort")
-      println(s"  pins: builds=$pins bytes=$pinBytes")
+      println(s"  pins: builds=$pins bytes=$pinBytes jobs=$pinJobs")
     } finally spark.sparkContext.removeSparkListener(log)
   }
 }

@@ -23,4 +23,9 @@ object Bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(ident, info, builder)
+
+  /** Block until every event posted so far has reached every listener
+    * (`listenerBus` is `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -691,6 +691,82 @@ class ExtSpec extends SparkSpec {
     assert(sized.count() == 20 && plain.count() == 30)
   }
 
+  /** Runs `f` under a fresh job group; returns its result and the
+    * number of jobs submitted in that group, including those AQE
+    * submits from its own threads, counted once the listener bus has
+    * drained. */
+  private def withJobCount[A](f: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"ExtSpec-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "ExtSpec job count")
+      val out = try f finally sc.clearJobGroup()
+      org.apache.spark.sql.graftx.Bridge.drainListenerBus(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val oneShuffle = spark.range(0, 5000, 1, 4).toDF("x")
+    .groupBy((col("x") % 37).as("k"))
+    .agg(count(lit(1)).as("n"), sum(col("x")).as("s"))
+
+  test("Pin.eager over a one-shuffle groupBy runs at most 2 jobs and keeps its rows") {
+    import graft.ext.Pin
+    Pin.reset()
+    val (pinned, jobs) = withJobCount(Pin.eager(oneShuffle))
+    assert(jobs >= 1 && jobs <= 2, s"the AQE map stage and the checkpoint job only: $jobs jobs")
+    assert(pinned.collect().toSeq.map(_.toString).sorted ==
+      oneShuffle.collect().toSeq.map(_.toString).sorted, "same rows as a multiset")
+    Pin.reset()
+  }
+
+  test("Pin.eager reports the exact row count and stored bytes as its statistics") {
+    import graft.ext.Pin
+    val sc = spark.sparkContext
+    Pin.reset()
+    val pinned = Pin.eager(oneShuffle)
+    val stats = pinned.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(37)))
+    val id = Pin.checkpointRdd(pinned).get.id
+    org.apache.spark.sql.graftx.Bridge.drainListenerBus(sc)
+    val stored = sc.getRDDStorageInfo.filter(_.id == id).map(i => i.memSize + i.diskSize).sum
+    assert(stored > 0 && stats.sizeInBytes == BigInt(stored),
+      s"sizeInBytes ${stats.sizeInBytes} must be the stored $stored bytes")
+    Pin.reset()
+  }
+
+  test("Pin partitions are min(checkpoint partitions, ceil(rows / rowsPerPart))") {
+    import graft.ext.Pin
+    val df = spark.range(0, 100, 1, 8).toDF("id")
+    val pinned = Pin.eager(df)
+    assert(Pin.checkpointRdd(pinned).get.getNumPartitions == 8)
+    assert(pinned.rdd.getNumPartitions == 1, "100 rows fit one 2M-row partition")
+    assert(Pin.sized(df, 100, rowsPerPart = 30).rdd.getNumPartitions == 4)
+    assert(Pin.sized(df, 100, rowsPerPart = 5).rdd.getNumPartitions == 8)
+    Pin.reset()
+  }
+
+  test("Pin.eager inside Futures on the shared session, as pretrainingCorpus builds them") {
+    import graft.ext.Pin
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val expected = oneShuffle.collect().toSeq.map(_.toString).sorted
+    val built = Seq(Future(Pin.eager(oneShuffle)), Future(Pin.eager(oneShuffle)))
+      .map(Await.result(_, 2.minutes))
+    built.foreach(p => assert(p.collect().toSeq.map(_.toString).sorted == expected))
+    assert(built.flatMap(Pin.checkpointRdd).map(_.name).forall(_ == Pin.Tag))
+    Pin.reset()
+  }
+
   test("Pin.eager: alias-different twins over one plan each resolve their own columns") {
     import graft.ext.Pin
     val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))

@@ -27,6 +27,15 @@ class InspectSpec extends SparkSpec {
     assert(text.contains("pins: builds="))
   }
 
+  test("prof counts the one pin an entry builds and attributes its jobs") {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Inspect.run(spark, sf, Seq("prof", "ann_ivfpq_rerank")))
+    val pins = out.toString("UTF-8").linesIterator.find(_.contains("pins: builds="))
+    val m = """pins: builds=(\d+) bytes=(\d+) jobs=(\d+)""".r.findFirstMatchIn(pins.get).get
+    assert(m.group(1) == "1", pins.get)
+    assert(m.group(2).toLong > 0 && m.group(3).toInt >= 1, pins.get)
+  }
+
   test("an unknown mode is rejected with the usage text") {
     val e = intercept[IllegalArgumentException](
       Inspect.run(spark, sf, Seq("dump", "pin_q1")))
