@@ -37,28 +37,31 @@ object SparkEntry {
       // re-sorted away by every downstream query; the *_clean dump
       // entries order explicitly themselves.
       val (rp, rg, ru) = graft.pipeline.RawDerive.tables(spark, sfDir)
-      // Build the three tables CONCURRENTLY: independent DAGs, one
-      // scheduler — the cluster pipelines their stages instead of
-      // idling between three sequential builds. (Spark job submission
-      // is thread-safe; this is the standard multi-job driver pattern.)
-      // Each is checkpointed like the operator pins (r18): a cached-only
-      // table keeps the full derive+clean plan in every consumer task's
-      // binary — the measured per-task deserialization floor, paid by
-      // all nine pin queries per invocation. The checkpoint stub cuts
-      // it, its partition count derives from the row count, not the
-      // core count, and it is the only stored copy. `kept`, not
-      // `eager`: `Pin.reset` between bench entries must not release
-      // the session's tables.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val t = Seq(Cleaning.cleanPin(rp, sort = false),
+      keptTogether(Cleaning.cleanPin(rp, sort = false),
         Cleaning.cleanGeo(rg, sort = false),
         Cleaning.cleanUser(ru, sort = false))
-        .map(df => Future(graft.ext.Pin.kept(df)))
-        .map(Await.result(_, Duration.Inf))
-      (t(0), t(1), t(2))
     })
+  }
+
+  /** Pin three session tables CONCURRENTLY: independent DAGs, one
+    * scheduler — the cluster pipelines their stages instead of idling
+    * between three sequential builds. (Spark job submission is
+    * thread-safe; this is the standard multi-job driver pattern.) Each
+    * is checkpointed like the operator pins (r18): a cached-only table
+    * keeps its full upstream plan in every consumer task's binary —
+    * the measured per-task deserialization floor, paid by all nine pin
+    * queries per invocation. The checkpoint stub cuts it, its
+    * partition count derives from the row count, not the core count,
+    * and it is the only stored copy. `kept`, not `eager`: `Pin.reset`
+    * between bench entries must not release the session's tables. */
+  private def keptTogether(a: DataFrame, b: DataFrame,
+      c: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val t = Seq(a, b, c).map(df => Future(graft.ext.Pin.kept(df)))
+      .map(Await.result(_, Duration.Inf))
+    (t(0), t(1), t(2))
   }
 
   /** Materialize the shared cleaning cache for a SF dir (Bench warm-up;
@@ -91,26 +94,22 @@ object SparkEntry {
     medallionCache.getOrElseUpdate((s, d), {
       val base = tmpDir("graft_medallion")
       graft.ingest.Fixtures.landStream(s, d, base)
-      def toSilver(table: String): String = {
+      def silver(table: String): DataFrame = {
         val bronze = s"$base/bronze_$table"
         graft.ingest.TxLog.streamSink(
           graft.streaming.StreamJob.source(s,
             s"$base/streams/streaming-${graft.ingest.Fixtures.topicPrefix}-$table",
             graft.streaming.StreamJob.schemas(table)),
           bronze, s"$base/ckpt_bronze_$table").awaitTermination()
-        val silver = s"$base/silver_$table"
+        val silverDir = s"$base/silver_$table"
         graft.ingest.TxLog.streamSink(
           graft.streaming.StreamJob.cleanStream(
             graft.ingest.TxLog.streamSource(s, bronze), table,
             watermarked = false),
-          silver, s"$base/ckpt_silver_$table").awaitTermination()
-        silver
+          silverDir, s"$base/ckpt_silver_$table").awaitTermination()
+        graft.ingest.TxLog.snapshot(s, silverDir)
       }
-      val t = (graft.ingest.TxLog.snapshot(s, toSilver("pin")).cache(),
-        graft.ingest.TxLog.snapshot(s, toSilver("geo")).cache(),
-        graft.ingest.TxLog.snapshot(s, toSilver("user")).cache())
-      t._1.count(); t._2.count(); t._3.count()
-      t
+      keptTogether(silver("pin"), silver("geo"), silver("user"))
     })
 
   private def medallionEntry(
@@ -144,35 +143,8 @@ object SparkEntry {
         k != "csv_scan_clean" && k != "orc_scan_clean" &&
         k != "avro_scan_clean" && // IO-layer verification, not throughput
         k != "json_robust_scan" && // IO-layer verification, not throughput
-        k != "txlog_time_travel" && // builds a table per call: IO class
-        k != "txlog_stats_prune" && // builds a table per call: IO class
-        k != "txlog_rowops" && // builds a table per call: IO class
-        k != "txlog_changes" && // builds a table per call: IO class
-        k != "txlog_schema_evolve" && // builds a table per call: IO class
-        k != "txlog_optimize" && // builds a table per call: IO class
-        k != "txlog_incremental_agg" && // builds a table per call: IO class
-        k != "txlog_sql_snapshot" && // builds a table per call: IO class
-        k != "txlog_restore" && // builds a table per call: IO class
-        k != "txlog_multi_prune" && // builds a table per call: IO class
-        k != "txlog_expectations" && // builds a table per call: IO class
-        k != "txlog_incremental_curation" && // builds tables per call: IO class
-        k != "txlog_dv" && // builds a table per call: IO class
-        k != "txlog_catalog_dml" && // builds a table per call: IO class
-        k != "txlog_catalog_rowlevel" && // builds a table per call: IO class
-        k != "txlog_catalog_masked_read" && // builds a table per call: IO class
-        k != "txlog_catalog_rowlevel_mor" && // builds a table per call: IO class
-        k != "txlog_catalog_ctas" && // builds a table per call: IO class
-        k != "txlog_column_mapping" && // builds a table per call: IO class
-        k != "txlog_clone" && // builds two tables per call: IO class
-        k != "txlog_sql_maintenance" && // builds two tables per call: IO class
-        k != "txlog_generated" && // builds a table per call: IO class
-        k != "txlog_bloom_prune" && // builds a table per call: IO class
-        k != "txlog_optimize_range" && // builds a table per call: IO class
-        k != "txlog_catalog_clustered" && // builds a table per call: IO class
-        k != "txlog_catalog_history" && // builds a table per call: IO class
-        k != "cdf_catalog_batch" && // builds a table per call: IO class
-        k != "txlog_catalog_skipping" && // builds a table per call: IO class
-        k != "txlog_catalog_replace" && // builds a table per call: IO class
+        // each builds one or two tables per call: IO class
+        !k.startsWith("txlog_") && !k.startsWith("cdf_") &&
         !k.startsWith("medallion_pin_q") && // shared streaming medallion: IO class
         // same results as ngram_jaccard via the hot-key-free candidate
         // path; its freq-agg + prefix overhead only pays off on corpora
@@ -765,12 +737,12 @@ object SparkEntry {
     "knn_pagerank" -> prep((s, d) =>
       Similarity.knnPageRank(emb(s, d)).orderBy("vec_id")),
     // the shared-graph production composition gate-backed: the kNN
-    // edge table is materialized ONCE (localCheckpoint) and feeds
+    // edge table is materialized ONCE (Pin.eager) and feeds
     // BOTH graph consumers (centrality + label accuracy) — the
     // amortized shape a real pipeline runs; the oracle recomputes
     // both from one knng chain
     "knn_pagerank_shared" -> prep((s, d) => {
-      val edges = Similarity.knnGraph(emb(s, d)).localCheckpoint()
+      val edges = graft.ext.Pin.eager(Similarity.knnGraph(emb(s, d)))
       val labels = emb(s, d).select(col("vec_id"), col("label"))
       val pr = Similarity.pageRankFromEdges(edges)
       val acc = Similarity.labelAccuracyFromEdges(edges, labels)
@@ -2416,7 +2388,7 @@ object SparkEntry {
     // the flagship medallion entry keeps a temp-view + SQL-name hop
     // in front of q1 (the registerView-equivalent surface; the
     // snapshot-backed registerView path itself is gated by
-    // txlog_sql_snapshot); q2-q9 read the shared cached snapshots
+    // txlog_sql_snapshot); q2-q9 read the shared pinned snapshots
     // directly (see medallionTables)
     "medallion_pin_q1" -> prep((s, d) => {
       val (pin, geo, _) = medallionTables(s, d)
@@ -3041,13 +3013,11 @@ object SparkEntry {
     * 10 partitions); the cap keeps one wave (a second wave buys
     * nothing on uniform work); bigger inputs widen toward full
     * parallelism automatically (the rows count is a parquet
-    * footer-metadata job, paid once per (session, file)).
-    * Env-overridable for experiments. */
-  private def fixtureParts(s: SparkSession, rows: Long): Int =
-    sys.env.get("SPARK_GRAFT_FIXTURE_PARTS").map(_.toInt).getOrElse {
-      val p = s.sparkContext.defaultParallelism.toLong
-      math.max(1L, math.min(p, (rows + 511) / 512)).toInt
-    }
+    * footer-metadata job, paid once per (session, file)). */
+  private def fixtureParts(s: SparkSession, rows: Long): Int = {
+    val p = s.sparkContext.defaultParallelism.toLong
+    math.max(1L, math.min(p, (rows + 511) / 512)).toInt
+  }
   private def sharedRead(s: SparkSession, path: String): DataFrame =
     readCache.getOrElseUpdate((s, path), {
       // localCheckpoint, not cache (r19): a cached fixture ships the

@@ -56,12 +56,10 @@ object Indexing {
             org.apache.spark.sql.types.IntegerType, nullable = false),
           org.apache.spark.sql.types.StructField("__off",
             org.apache.spark.sql.types.LongType, nullable = false))))
-      val out = sorted.join(broadcast(offDf), "__pid")
+      // pinned before unpersist releases the two-pass snapshot
+      Pin.eager(sorted.join(broadcast(offDf), "__pid")
         .withColumn(idCol, col("__off") + col("__local"))
-        .drop("__pid", "__local", "__off")
-      // materialize before unpersist releases the two-pass snapshot
-      out.cache().count()
-      out
+        .drop("__pid", "__local", "__off"))
     } finally sorted.unpersist()
   }
 }

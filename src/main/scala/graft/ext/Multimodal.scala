@@ -310,7 +310,7 @@ object Multimodal {
     val pairs = Dedup.simhashPairsFrom(
       groups.select(col("rep_id").as("doc_id"), col("ahash").as("simhash")),
       maxHamming)
-    val out = pairs
+    pairs
       .join(audit.toDF("a_id", "n_a", "n_a_verified"), "a_id")
       .join(audit.toDF("b_id", "n_b", "n_b_verified"), "b_id")
       .join(px.toDF("a_id", "pa"), "a_id")
@@ -320,8 +320,6 @@ object Multimodal {
       .select(col("a_id"), col("b_id"), col("hamming"),
         col("sum_abs_diff"), col("n_a"), col("n_a_verified"),
         col("n_b"), col("n_b_verified"))
-      .localCheckpoint()
-    out
   }
 
   // ---- real-codec tier (round 12: the codec seam, closed) ----------

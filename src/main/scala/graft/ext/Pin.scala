@@ -22,12 +22,12 @@ import org.apache.spark.sql.graftx.Checkpoint
   *
   * A pin is built in one pass (`graftx.Checkpoint.local`): the frame is
   * planned once, its rows are locally checkpointed, and the one job
-  * that stores them also counts them. The returned frame is then
-  * `sized`: it scans the checkpoint, so its lineage is truncated, and
-  * its partitions are coalesced to the counted rows, a narrow step that
-  * runs no job. Profiling in r18 (jstack sampling of the executor
-  * pool) attributed the dominant CPU of every post-pin
-  * stage to `ObjectInputStream.readObject` — task-binary
+  * that stores them also counts them. The returned frame scans the
+  * checkpoint, so its lineage is truncated, and its partitions are
+  * coalesced to the counted rows, a narrow step that runs no job.
+  * Profiling in r18 (jstack sampling of the executor pool) attributed
+  * the dominant CPU of every post-pin stage to
+  * `ObjectInputStream.readObject` — task-binary
   * deserialization: a persisted frame keeps its FULL upstream plan in
   * the serialized RDD graph, so each downstream task paid ~0.2 s just
   * deserializing the pipeline it never runs, multiplied by every task
@@ -40,6 +40,11 @@ import org.apache.spark.sql.graftx.Checkpoint
   * deserialization cost per consumer stage. The frame's statistics
   * are the exact row count and the checkpoint's stored bytes, so a
   * consumer's broadcast decision sees the real size.
+  *
+  * `eager` and `kept` are the only ways the operator kit, the
+  * streaming tier and `SparkEntry` store a frame (the fixture stub in
+  * `SparkEntry.sharedRead` aside); an operator's result is returned
+  * lazy, for its one consumer to run.
   *
   * Use ONLY on lightweight proxies (counts-collapsed tables,
   * signatures, thumbnails, assignments — guide §8 "decide with small
@@ -64,8 +69,7 @@ object Pin {
   private val RowsPerPart = 2L * 1000 * 1000
 
   /** Name given to the checkpoint RDD behind every `eager` pin: `reset`
-    * releases exactly these, never a caller's own `sized` or
-    * `localCheckpoint` frames. */
+    * releases exactly these, never a `kept` frame. */
   private[graft] val Tag = "graft.ext.Pin.eager"
 
   /** Name of the SQL execution, and call site of the jobs and stages,
@@ -104,7 +108,7 @@ object Pin {
   private[graft] def pinRdds(sc: SparkContext): Seq[RDD[_]] =
     sc.getPersistentRDDs.values.filter(_.name == Tag).toSeq
 
-  /** The locally checkpointed RDD behind a frame `sized` returned. */
+  /** The locally checkpointed RDD behind a pinned frame. */
   private[graft] def checkpointRdd(df: DataFrame): Option[RDD[_]] =
     df.queryExecution.logical.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
@@ -117,28 +121,16 @@ object Pin {
     * releases it, and built even under `withDisabled`. */
   def kept(df: DataFrame): DataFrame = build(df, "Pin.kept", None)
 
-  /** Checkpoint `df` in one pass, truncating its lineage, and coalesce
-    * it to `rows` / `rowsPerPart` partitions: downstream task binaries
-    * then carry a checkpoint-scan stub instead of the full upstream
-    * plan. Untagged, like `kept`. */
-  def sized(df: DataFrame, rows: Long,
-      rowsPerPart: Long = RowsPerPart): DataFrame = {
-    val (frame, rdd, _) = Checkpoint.local(df, "Pin.sized", None)
-    coalesced(frame, rdd, rows, rowsPerPart)
-  }
-
   private def build(df: DataFrame, name: String,
       tag: Option[String]): DataFrame = {
     val (frame, rdd, rows) = Checkpoint.local(df, name, tag)
-    coalesced(frame, rdd, rows, RowsPerPart)
+    val parts = partitionsFor(rdd.getNumPartitions, rows)
+    if (parts < rdd.getNumPartitions) frame.coalesce(parts) else frame
   }
 
-  /** `frame` coalesced to min(its partitions, ceil(rows / rowsPerPart)). */
-  private def coalesced(frame: DataFrame, rdd: RDD[_], rows: Long,
-      rowsPerPart: Long): DataFrame = {
-    val cur = math.max(rdd.getNumPartitions, 1)
-    val parts = math.max(1L,
-      math.min(cur.toLong, (rows + rowsPerPart - 1) / rowsPerPart)).toInt
-    if (parts < cur) frame.coalesce(parts) else frame
-  }
+  /** min(`stored` partitions, ceil(`rows` / `rowsPerPart`)), at least 1. */
+  private[graft] def partitionsFor(stored: Int, rows: Long,
+      rowsPerPart: Long = RowsPerPart): Int =
+    math.max(1L, math.min(stored.toLong,
+      (rows + rowsPerPart - 1) / rowsPerPart)).toInt
 }

@@ -647,20 +647,17 @@ object Similarity {
     * by summation order). kNN graphs have no dangling nodes (a
     * neighbor shares a cell, so it has candidates of its own).
     *
-    * Scale shape: the edge table (corpus·k rows, narrow) is built once
-    * and CACHED (same eager trade as dupClusters/kcenterSample — the
-    * alternative re-derives the whole kNN build per iteration
-    * reference); each iteration is one join + map-combinable groupBy
-    * on the dst key composed LAZILY, so up to `checkpointEvery`
-    * iterations share one linear plan over the cached edges. Plan /
-    * lineage depth grows linearly with `iters`, so every
-    * `checkpointEvery` (default 8) iterations the score table is
-    * `localCheckpoint`ed — narrow (id, sc) rows — truncating lineage
-    * before Catalyst analysis cost or lineage re-execution depth
-    * becomes the bottleneck at high iteration counts. The final scores
-    * are materialized eagerly (same trade as the cache) so the edge /
-    * node caches can be unpersisted before returning — repeated
-    * invocations in one session do not accumulate executor storage.
+    * Scale shape: the edge table (corpus·k rows, narrow) is pinned
+    * once (`Pin.eager` — the alternative re-derives the whole kNN
+    * build per iteration reference); each iteration is one join +
+    * map-combinable groupBy on the dst key composed LAZILY, so up to
+    * `checkpointEvery` iterations share one linear plan over the
+    * pinned edges. Plan / lineage depth grows linearly with `iters`,
+    * so every `checkpointEvery` (default 8) iterations the score table
+    * — narrow (id, sc) rows — is pinned too, truncating lineage before
+    * Catalyst analysis cost or lineage re-execution depth becomes the
+    * bottleneck at high iteration counts. The final scores are
+    * returned lazy; the pins live until the next `Pin.reset`.
     * Driver state: the node count. */
   def knnPageRank(emb: DataFrame, k: Int = 5, iters: Int = 5,
       centroidMod: Int = 50, checkpointEvery: Int = 8): DataFrame =
@@ -724,8 +721,8 @@ object Similarity {
     // each re-ran the whole kNN build (the build's exchange appeared 3×
     // per invocation in the stage log: fill + the two branches). The
     // pinned table is the narrow (src, dst, deg) proxy, corpus·k rows.
-    val e = edges.join(outdeg, "src")
-      .select(col("src"), col("dst"), col("deg")).localCheckpoint()
+    val e = Pin.eager(edges.join(outdeg, "src")
+      .select(col("src"), col("dst"), col("deg")))
     // src ∪ dst: unfiltered kNN output has every node as a src, but
     // the documented contract is only the (vec_id, nbr_id) schema — a
     // caller that filters weak edges first leaves dst-only nodes,
@@ -734,10 +731,9 @@ object Similarity {
     // eager pin (r18): the loop below references `nodes` once per
     // iteration — a persisted-only node set ships its full lineage in
     // every iteration task's binary (the measured ~0.2 s/task
-    // deserialization floor); the checkpoint stub doesn't.
-    // Pin.eager releases its persist once the checkpoint lands; the
-    // count below reads the checkpointed stub (single narrow partition
-    // at proxy scale).
+    // deserialization floor); the checkpoint stub doesn't. The count
+    // below reads the checkpointed stub (single narrow partition at
+    // proxy scale).
     val nodes = Pin.eager(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
     val n = nodes.count()
@@ -759,11 +755,10 @@ object Similarity {
           (lit(base) + expr("(85 * coalesce(in, 0)) div 100")).as("sc"))
       // semantic no-op: values are identical either side of the cut
       if (i % checkpointEvery == 0 && i < iters)
-        scores = scores.localCheckpoint()
+        scores = Pin.eager(scores)
     }
     scores.select(col("id").as("vec_id"), col("sc").as("q_rank"),
       (col("sc").cast("double") / SCALE).as("pagerank"))
-      .localCheckpoint()
   }
 
   /** Residual IVF-PQ (IVFADC proper) — the composition FAISS ships as
@@ -1406,16 +1401,15 @@ object Similarity {
     // otherwise each re-execute the full Lloyd chain (the
     // clusterTopTerms/knnPageRank double-build shape — measured 2× op
     // cost), and a LAZY cache still raced AQE's concurrent stages on
-    // first evaluation. Kept persisted (no unpersist) so repeated
-    // invocations substitute the materialized assignment — at
-    // production scale the assignment is persisted/written anyway; it
-    // feeds every downstream cluster consumer.
+    // first evaluation. The pin lives until the next `Pin.reset`; the
+    // result is lazy, so its one consumer runs the moment rollup and
+    // the score join in one query.
     val assigned = Pin.eager(kmeansAssign(emb, k, iters))
     val stats = assigned.groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_members"),
         sum(col("dist").cast(dec)).as("s1"),
         sum(col("dist").cast(dec) * col("dist").cast(dec)).as("s2"))
-    val out = assigned.join(broadcast(stats), "cluster")
+    assigned.join(broadcast(stats), "cluster")
       .withColumn("mean_dist",
         col("s1").cast("double") / col("n_members").cast("double"))
       .withColumn("var_dist",
@@ -1432,7 +1426,5 @@ object Similarity {
       .select(col("vec_id"), col("cluster"), col("dist"), col("n_members"),
         col("mean_dist"), col("var_dist"), col("z"),
         coalesce(col("z") > threshold, lit(false)).as("is_outlier"))
-      .localCheckpoint()
-    out
   }
 }

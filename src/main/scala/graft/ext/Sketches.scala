@@ -253,11 +253,10 @@ object Sketches {
     // the kept sliver feeds BOTH the verify join and the final select —
     // materialize it once (double-build rule: its upstream contains the
     // corpus-proportional CMS pass, which must not run per consumer)
-    val kept = cands.crossJoin(bc(stats))
+    val kept = Pin.eager(cands.crossJoin(bc(stats))
       .select(col("token"), least(cells: _*).as("est_freq"),
         col("threshold"))
-      .where(col("est_freq") >= col("threshold"))
-      .localCheckpoint()
+      .where(col("est_freq") >= col("threshold")))
     val exact = toks.join(bc(kept.select("token")), Seq("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("exact_freq"))
     kept.join(exact, Seq("token"))
@@ -280,7 +279,7 @@ object Sketches {
     * Members = even doc_ids, probes = odd doc_ids (disjoint by
     * construction, so every probe hit IS a false positive). Scale
     * shape: the bit-position set is ≤ m rows (built once,
-    * localCheckpoint — it feeds the bit-count agg and the probe join),
+    * `Pin.eager` — it feeds the bit-count agg and the probe join),
     * probes join it BROADCAST per exploded position and roll up to one
     * row; the transcendental in the bound is quantized ·10⁹ and the
     * k-th power is spelled as a pinned multiplication tree, so both
@@ -301,8 +300,8 @@ object Sketches {
     }: _*)
     val member = keys(0)
     val probe = keys(1)
-    val bits = member.select(explode(positions(col("h"))).as("pos"))
-      .distinct().localCheckpoint()
+    val bits = Pin.eager(member.select(explode(positions(col("h"))).as("pos"))
+      .distinct())
     val perProbe = probe.select(col("h"), explode(positions(col("h"))).as("pos"))
       .join(bc(bits.withColumn("present", lit(1))), Seq("pos"), "left")
       .groupBy(col("h"))
@@ -419,14 +418,14 @@ object Sketches {
     * mirror detection vs tokenizer-budget planning.
     *
     * Scale shape: the register table is materialized ONCE
-    * (localCheckpoint — |sources| rows × 2^p bytes; the corpus-
+    * (`Pin.eager` — |sources| rows × 2^p bytes; the corpus-
     * proportional tokenize must not re-run per self-join branch, the
     * double-build rule) and the pair join is |sources|² over that
     * kilobyte-scale table. est_intersection clamps inclusion–
     * exclusion noise at 0. Returns (source_a, source_b, est_a, est_b,
     * est_union, est_intersection, est_jaccard). */
   def hllUnionSources(docs: DataFrame, p: Int = 10): DataFrame =
-    hllUnionSourcesFromRegs(hllRegistersOf(docs, p).localCheckpoint(), p)
+    hllUnionSourcesFromRegs(Pin.eager(hllRegistersOf(docs, p)), p)
 
   /** The per-source register table (source, regs) — the batch-owned,
     * persistable half of the HLL surface (the `knnGraph`-edges /

@@ -1144,7 +1144,6 @@ object TextAnalysis {
         when(col("q_doc").cast("double") >= col("cut_hi"), "head")
           .when(col("q_doc").cast("double") >= col("cut_lo"), "middle")
           .otherwise("tail").as("ccnet_bucket"))
-      .localCheckpoint()
   }
 
   /** TF-IDF top terms per document — the classic distinctive-term
@@ -1203,11 +1202,10 @@ object TextAnalysis {
     * tokenize), K a 1-row broadcast, and the per-cluster top-m window
     * WindowGroupLimit-pruned. |clusters·vocab| intermediate, never
     * corpus-row-proportional after the first count. The assignment is
-    * CACHED and every branch (count join, K) derives from the cache —
+    * pinned and every branch (count join, K) derives from the pin —
     * the K branch would otherwise re-execute the whole upstream
     * (kmeans) pipeline, the knnPageRank double-build lesson; the tiny
-    * (≤ K·m-row) output is materialized eagerly so the cache can be
-    * dropped before returning. */
+    * (≤ K·m-row) output is returned lazy. */
   def clusterTopTerms(docs: DataFrame, assign: DataFrame,
       m: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1227,7 +1225,7 @@ object TextAnalysis {
     val kCnt = a.agg(countDistinct(col("cluster")).as("n_clusters"))
     val w = Window.partitionBy(col("cluster"))
       .orderBy(col("q_ctfidf").desc, col("tok").asc)
-    val out = tf.join(dfreq, "tok")
+    tf.join(dfreq, "tok")
       .crossJoin(broadcast(kCnt))
       .select(col("cluster"), col("tok"), col("tf"), col("df"),
         (col("tf") * round(log(col("n_clusters").cast("double") /
@@ -1235,8 +1233,6 @@ object TextAnalysis {
       .withColumn("rk", row_number().over(w))
       .where(col("rk") <= m)
       .drop("rk")
-      .localCheckpoint()
-    out
   }
 
   /** BM25 top-k retrieval — the standard lexical ranking function
@@ -2066,33 +2062,22 @@ object TextAnalysis {
     *
     * Scale shape: the three token-level metrics (diversity, KL, Zipf)
     * all derive from the IDENTICAL (source, tok) count aggregate —
-    * materialized ONCE via cache-then-derive (`sourceTokenCounts` is
-    * cached, every token branch reads the cache; relying on AQE/
-    * ReuseExchange instead silently re-planned the tokenize per
-    * branch, because join-key isnotnull pushdowns broke canonical
-    * equality between the branches' exchanges — caught and pinned by
-    * PlanSpec). Char entropy and length quantiles add one char-count
-    * and one length-count exchange; the final join is |sources| rows,
-    * materialized eagerly so the counts cache unpersists before
-    * returning.
-    *
-    * `materialize = false` skips the eager checkpoint/unpersist and
-    * returns the LAZY composition with the counts cache left
-    * persisted (caller manages its lifetime) — the plan-inspection
-    * hook PlanSpec uses to pin this shape. */
-  def sourceHealthReport(docs: DataFrame,
-      materialize: Boolean = true): DataFrame = {
+    * pinned ONCE (`sourceTokenCounts` under `Pin.eager`, every token
+    * branch reads the pin; relying on AQE/ReuseExchange instead
+    * silently re-planned the tokenize per branch, because join-key
+    * isnotnull pushdowns broke canonical equality between the
+    * branches' exchanges — caught and pinned by PlanSpec). Char
+    * entropy and length quantiles add one char-count and one
+    * length-count exchange; the final join is |sources| rows, returned
+    * lazy. */
+  def sourceHealthReport(docs: DataFrame): DataFrame = {
     // eager pin (r18, upgraded r19): a lazily-filled cache does NOT
     // dedup under AQE's concurrent stage materialization — the token
     // branches race before any partition lands and each re-runs the
     // tokenize (3 duplicate count-exchange map stages measured); the
-    // eager build makes every branch a checkpoint-stub read. The
-    // materialize=false plan-inspection hook keeps the r17
-    // cache-then-derive shape PlanSpec pins (a checkpoint stub would
-    // hide the branches' shared read from the plan).
-    val sc = if (materialize) Pin.eager(sourceTokenCounts(docs))
-      else sourceTokenCounts(docs).cache()
-    val lazyOut = lexicalDiversityFromCounts(sc)
+    // eager build makes every branch a checkpoint-stub read.
+    val sc = Pin.eager(sourceTokenCounts(docs))
+    lexicalDiversityFromCounts(sc)
       .join(klDivergenceFromCounts(sc)
         .select(col("source"), col("kl_divergence")), "source")
       .join(zipfFitFromCounts(sc)
@@ -2101,10 +2086,6 @@ object TextAnalysis {
         "source")
       .join(lengthQuantiles(docs).select(col("source"), col("n_docs"),
         col("p50_tokens"), col("p90_tokens"), col("p99_tokens")), "source")
-    if (!materialize) return lazyOut
-    // the RESULT is checkpointed but never memoised — every invocation
-    // recomputes the report from freshly pinned counts
-    lazyOut.localCheckpoint()
   }
 
   /** Per-source Zipf fit — least-squares slope of ln(freq) on ln(rank)

@@ -158,15 +158,22 @@ object TxLog {
     * is gone — vacuumed history or a never-landed version). */
   private def commitAt(table: String, v: Long): Option[Commit] = {
     val f = commitFile(table, v)
-    if (!Files.exists(f)) return None
+    if (!Files.exists(f)) None else Some(cachedParse(f))
+  }
+
+  /** `parseCommit(f)` through the parse cache, keyed by the file's
+    * path, size and mtime; parsed uncached if the file cannot be
+    * stat'ed. */
+  private def cachedParse(f: Path): Commit = {
     val key =
       try s"${f.toAbsolutePath}:${Files.size(f)}:${Files.getLastModifiedTime(f).toMillis}"
       catch { case _: Exception => "" }
-    Some(if (key.nonEmpty) {
+    if (key.isEmpty) parseCommit(f)
+    else {
       val hit = parseCache.get(key)
       if (hit != null) hit
       else { val c = parseCommit(f); parseCache.put(key, c); c }
-    } else parseCommit(f))
+    }
   }
 
   /** A commit's effective timestamp: the in-commit stamp when present,
@@ -188,16 +195,7 @@ object TxLog {
         n.matches("\\d{10}\\.txt") && n.stripSuffix(".txt").toLong >= fromV
       }
       .sortBy(_.getFileName.toString)
-    files.map { f =>
-      val key =
-        try s"${f.toAbsolutePath}:${Files.size(f)}:${Files.getLastModifiedTime(f).toMillis}"
-        catch { case _: Exception => "" }
-      if (key.nonEmpty) {
-        val hit = parseCache.get(key)
-        if (hit != null) hit
-        else { val c = parseCommit(f); parseCache.put(key, c); c }
-      } else parseCommit(f)
-    }
+    files.map(cachedParse)
   }
 
   private def parseCommit(f: Path): Commit = {

@@ -62,7 +62,11 @@ object CorpusStream {
       w: Int = 3): DataFrame = {
     import graft.ext.Dedup
     val k = bands * rows
-    corpus
+    // built ONCE: the per-band probe joins (and every micro-batch)
+    // would otherwise re-run the corpus-proportional tokenize+MinHash
+    // pipeline once per band. `kept`: the streaming query reads it for
+    // its whole life, so `Pin.reset` must not release it.
+    graft.ext.Pin.kept(corpus
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("ws"))
       .select(col("doc_id"), Dedup.minhashSigCol(col("ws"), k, w).as("sig"))
       .select(col("sig"),
@@ -72,12 +76,7 @@ object CorpusStream {
       // array_sort: collect_list order is scheduling-dependent —
       // probes are order-independent (exists), but the PERSISTED index
       // artifact must be byte-deterministic like every other artifact
-      .agg(array_sort(collect_list(col("sig"))).as("bsigs"))
-      // materialize ONCE: the per-band probe joins (and every
-      // micro-batch) would otherwise re-run the corpus-proportional
-      // tokenize+MinHash pipeline once per band — 8 full corpus scans
-      // per batch in the self-building paths
-      .localCheckpoint()
+      .agg(array_sort(collect_list(col("sig"))).as("bsigs")))
   }
 
   /** `nearDupVsCorpus` over a PRE-BUILT band index (`bandIndexOf`'s

@@ -107,7 +107,7 @@ object ScaleProbe {
       t("knnGraph", n)(Similarity.knnGraph(emb).count())
       t("knnPageRank", n)(Similarity.knnPageRank(emb).count())
       // round-8: iterative-depth hazard measured, not argued — 20
-      // lazily-composed iterations with the periodic localCheckpoint
+      // lazily-composed iterations with the periodic score pin
       // guard; cost should stay ~linear in iters, flat per multiple
       t("knnPageRank20", n)(Similarity.knnPageRank(emb, iters = 20).count())
       // round-8: curriculum rank fan-out — (phase, bucket) windows must
@@ -218,7 +218,7 @@ object ScaleProbe {
       // track knnGraph's trajectory (the mutual sliver is ≤ k·N rows)
       t("knnCommunities", n)(Similarity.knnCommunities(emb).count())
       if (only.forall(_.contains("pageRankFromEdges"))) {
-        val knnEdges = Similarity.knnGraph(emb).localCheckpoint()
+        val knnEdges = Pin.eager(Similarity.knnGraph(emb))
         t("pageRankFromEdges", n)(
           Similarity.pageRankFromEdges(knnEdges).count())
       }

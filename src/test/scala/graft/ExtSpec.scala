@@ -623,10 +623,9 @@ class ExtSpec extends SparkSpec {
 
   test("knnPageRank: localCheckpoint cadence is a semantic no-op; iters=20 completes") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    // count MEMORY_AND_DISK cache() entries before/after — the edge +
-    // node caches must be unpersisted by each invocation (checkpoint
-    // RDDs are excluded: localCheckpoint persists with disk-backed
-    // levels and stays referenced by the returned frame)
+    // count persisted non-checkpoint RDDs before/after: every store in
+    // the pageRank path is a pin (checkpoint RDDs are excluded here;
+    // `Pin.reset` releases them, see the lifetime test below)
     def cachedCount: Int = spark.sparkContext.getPersistentRDDs.values
       .count(r => !r.isCheckpointed)
     val cachedBefore = cachedCount
@@ -645,10 +644,8 @@ class ExtSpec extends SparkSpec {
     assert(pr20.length == cut.length)
     val total = pr20.map(_.getLong(1)).sum
     assert(total <= 1000000000000L && total >= 1000000000000L - 100L * pr20.length)
-    // Pin.eager releases each pin's persist once its checkpoint lands,
-    // so the three runs above leave only checkpoint RDDs (excluded
-    // above) stored: repeated invocations must NOT grow the
-    // non-checkpoint set.
+    // the three runs above store only pins (checkpoint RDDs, excluded
+    // above): repeated invocations must NOT grow the non-checkpoint set.
     assert(cachedCount <= cachedBefore + 3,
       s"no per-invocation growth of non-checkpoint persisted RDDs: $cachedBefore -> $cachedCount")
   }
@@ -677,18 +674,70 @@ class ExtSpec extends SparkSpec {
     Pin.reset()
   }
 
-  test("Pin.reset leaves Pin.sized and plain localCheckpoint frames readable") {
+  test("Pin.reset leaves Pin.kept and plain localCheckpoint frames readable") {
     import graft.ext.Pin
     val sc = spark.sparkContext
     Pin.reset()
-    val sized = Pin.sized(spark.range(20).toDF("id"), 20)
+    val kept = Pin.kept(spark.range(20).toDF("id"))
     val plain = spark.range(30).toDF("id").localCheckpoint()
     val pinned = Pin.eager(spark.range(40).toDF("id"))
     assert(Pin.pinRdds(sc).map(_.id).toSet ==
       Pin.checkpointRdd(pinned).map(_.id).toSet, "only the eager pin is tagged")
     Pin.reset()
     assert(Pin.pinRdds(sc).isEmpty)
-    assert(sized.count() == 20 && plain.count() == 30)
+    assert(kept.count() == 20 && plain.count() == 30)
+    assert(Pin.withDisabled(Pin.kept(plain)).ne(plain), "kept builds even when disabled")
+  }
+
+  test("every operator that stores a frame stores it as a pin: Pin.reset releases them all") {
+    import graft.ext.{Indexing, Pin, Sketches}
+    val sc = spark.sparkContext
+    val d = spark.read.parquet(s"$sf/documents.parquet")
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    Pin.reset()
+    val before = sc.getPersistentRDDs.keySet.toSet
+    Seq(
+      Similarity.knnPageRank(emb, iters = 3, checkpointEvery = 2),
+      Similarity.pageRankFromEdges(Pin.eager(Similarity.knnGraph(emb))),
+      Similarity.embeddingOutliers(emb),
+      TextAnalysis.lmQualityBuckets(d),
+      TextAnalysis.clusterTopTerms(d, Similarity.kmeansAssign(emb, k = 8, iters = 2)),
+      TextAnalysis.sourceHealthReport(d),
+      Multimodal.imageDupVerified(spark, Multimodal.toAssets(
+        d.withColumn("n_chars", length(col("text")).cast("long")))),
+      Sketches.cmsHeavyHitters(d),
+      Sketches.bloomFprAudit(d),
+      Sketches.hllUnionSources(d),
+      Indexing.stableRowIds(d.select("doc_id"), Seq("doc_id")),
+      Sampling.negativeSamples(d)
+    ).foreach(_.collect())
+    assert(Pin.pinRdds(sc).nonEmpty)
+    Pin.reset()
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"persisted after Pin.reset: ${left.values.map(r => s"${r.id} ${r.name}")}")
+  }
+
+  test("no .localCheckpoint() in src/main outside the fixture stub in SparkEntry.sharedRead") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the project root: $root")
+    val files = {
+      val w = java.nio.file.Files.walk(root)
+      try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally w.close()
+    }
+    // each call site as (file, the nearest enclosing `def`)
+    val sites = files.flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      lines.indices.filter(lines(_).contains(".localCheckpoint()")).map { i =>
+        val owner = (i to 0 by -1).iterator.map(lines)
+          .collectFirst { case l if l.trim.matches("""(private |override )*def \w+.*""") =>
+            l.trim.replaceFirst("""^(private |override )*def (\w+).*""", "$2") }
+        (f.getFileName.toString, owner.getOrElse("?"))
+      }
+    }
+    assert(sites == Seq(("SparkEntry.scala", "sharedRead")),
+      s"store shared frames with Pin.eager / Pin.kept, not localCheckpoint: $sites")
   }
 
   /** Runs `f` under a fresh job group; returns its result and the
@@ -749,8 +798,13 @@ class ExtSpec extends SparkSpec {
     val pinned = Pin.eager(df)
     assert(Pin.checkpointRdd(pinned).get.getNumPartitions == 8)
     assert(pinned.rdd.getNumPartitions == 1, "100 rows fit one 2M-row partition")
-    assert(Pin.sized(df, 100, rowsPerPart = 30).rdd.getNumPartitions == 4)
-    assert(Pin.sized(df, 100, rowsPerPart = 5).rdd.getNumPartitions == 8)
+    assert(Pin.kept(df).rdd.getNumPartitions == 1)
+    assert(Pin.partitionsFor(8, 100, rowsPerPart = 30) == 4)
+    assert(Pin.partitionsFor(8, 100, rowsPerPart = 5) == 8)
+    assert(Pin.partitionsFor(8, 0) == 1, "an empty pin keeps one partition")
+    assert(Pin.partitionsFor(8, 2000000) == 1 && Pin.partitionsFor(8, 2000001) == 2,
+      "ceil(rows / 2M)")
+    assert(Pin.partitionsFor(3, 10000000) == 3, "never more than stored")
     Pin.reset()
   }
 

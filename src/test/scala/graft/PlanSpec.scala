@@ -409,11 +409,13 @@ class PlanSpec extends SparkSpec {
 
   test("negativeSamples: range-exchange positions, no global window, no cartesian") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val p = plan(graft.ext.Sampling.negativeSamples(docs))
+    // Pin disabled: stableRowIds pins its positions, and the
+    // checkpoint stub would hide the range exchange the pin build runs
+    val p = graft.ext.Pin.withDisabled(
+      plan(graft.ext.Sampling.negativeSamples(docs)))
     assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
-    // positions come from stableRowIds' cached range-exchange table
-    // (the range partitioning happened at cache materialization; this
-    // plan must read that cache, not re-rank through a global window)
+    // positions come from stableRowIds' range-exchange table, not a
+    // re-rank through a global window
     assert(p.contains("InMemoryTableScan") || p.toLowerCase.contains("rangepartitioning"),
       s"positions must come from the stableRowIds table:\n$p")
     // no window rank anywhere (the N scalar's 1-row count agg is the
@@ -507,21 +509,25 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), s"top-k cut:\n${p.take(1500)}")
   }
 
-  test("sourceHealthReport: one cached (source, tok) table feeds every token branch") {
+  test("sourceHealthReport: one pinned (source, tok) table feeds every token branch") {
     // the scaladoc claim pinned: lexicalDiversity, klDivergence and
     // zipfFit all derive from the IDENTICAL (source, tok) count
-    // aggregate, materialized ONCE (cache-then-derive). The naive
-    // composition relied on AQE exchange reuse, which silently failed
-    // — per-branch isnotnull join pushdowns broke canonical equality
-    // and every branch re-planned its own tokenize (3× the corpus
-    // explode). This pin fails if any branch stops reading the cache.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.GenerateExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // aggregate, pinned ONCE. The naive composition relied on AQE
+    // exchange reuse, which silently failed — per-branch isnotnull
+    // join pushdowns broke canonical equality and every branch
+    // re-planned its own tokenize (3× the corpus explode). This pin
+    // fails if any branch stops reading the pinned counts.
+    import org.apache.spark.sql.execution.{GenerateExec, RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
     val d = spark.read.parquet(s"$sf/documents.parquet")
-    val q = graft.ext.TextAnalysis.sourceHealthReport(d, materialize = false)
-    q.collect() // cache/stage decisions are made at runtime
+    val q = graft.ext.TextAnalysis.sourceHealthReport(d)
+    val counts = q.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD
+          if r.output.map(_.name) == Seq("source", "tok", "cnt") => r.rdd
+    }.distinct
+    assert(counts.size == 1 && counts.head.name == graft.ext.Pin.Tag,
+      s"the (source, tok) counts must be one eager pin: $counts")
+    q.collect() // stage decisions are made at runtime
     val root = q.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case other => other
@@ -532,17 +538,17 @@ class PlanSpec extends SparkSpec {
       p.collect { case s: QueryStageExec => s }
         .flatMap(s => s +: stages(s.plan))
     val all = stages(root)
-    // the counts cache is scanned once per token-level branch: the
-    // tokenize+count ran ONCE (inside the cached relation), and ≥3
-    // InMemoryTableScans over a (source, tok, cnt) output read it
-    val cacheScans = (root.collect { case s: InMemoryTableScanExec => s } ++
-      all.flatMap(_.plan.collect { case s: InMemoryTableScanExec => s }))
-      .filter(_.output.map(_.name).toSet.intersect(Set("tok", "cnt")).nonEmpty)
-    assert(cacheScans.size >= 3,
-      s"all three token-level branches must read the counts cache, " +
-        s"got ${cacheScans.size} cache scans")
-    // outside the cached counts build, the only explode left is the
-    // char-entropy one — a second means a branch re-planned tokenize
+    // the pin is scanned once per token-level branch: the
+    // tokenize+count ran ONCE (in the pin build), and ≥3 scans of the
+    // pin's checkpoint read it
+    val pinScans = (root.collect { case s: RDDScanExec => s } ++
+      all.flatMap(_.plan.collect { case s: RDDScanExec => s }))
+      .filter(_.rdd eq counts.head)
+    assert(pinScans.size >= 3,
+      s"all three token-level branches must read the pinned counts, " +
+        s"got ${pinScans.size} pin scans")
+    // the pin build holds the tokenize, so the only explode left is
+    // the char-entropy one — a second means a branch re-planned it
     val genStages = all.collect { case s: ShuffleQueryStageExec => s }
       .groupBy(_.id).values.map(_.head)
       .count(_.plan.collect { case g: GenerateExec => g }.nonEmpty)
@@ -551,11 +557,12 @@ class PlanSpec extends SparkSpec {
       s"tokenize must not be re-planned per branch " +
         s"($genStages explode-bearing stages + $genTop top-level)")
     assert(!root.toString.contains("CartesianProduct"), "no cartesian products")
+    graft.ext.Pin.reset()
   }
 
   test("cmsHeavyHitters: broadcast verify join, no cartesian; CMS partial-aggregates") {
     val d = spark.read.parquet(s"$sf/documents.parquet")
-    // the kept sliver is localCheckpoint'd (double-build rule), so the
+    // the kept sliver is pinned (double-build rule), so the
     // FINAL plan is the verify join over an ExistingRDD scan — the
     // sketch pass itself is pinned on the lazily-composed cmsTokenFreq,
     // which runs the identical matrix aggregate

@@ -17,6 +17,9 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.queries.nonEmpty && SparkEntry.oracleSql.nonEmpty)
     // bench set is a subset of queries (excluded IO surfaces aside)
     assert(SparkEntry.benchQueries.keySet.subsetOf(SparkEntry.queries.keySet))
+    // every txlog_/cdf_ entry builds tables per call: IO class, not benched
+    val io = SparkEntry.queries.keySet.filter(k => k.startsWith("txlog_") || k.startsWith("cdf_"))
+    assert(io.nonEmpty && SparkEntry.benchQueries.keySet.intersect(io).isEmpty)
   }
 
   test("warming the cleaned tables stores only their checkpoint stubs") {

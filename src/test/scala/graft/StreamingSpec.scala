@@ -103,8 +103,9 @@ class StreamingSpec extends SparkSpec {
     val arrivals = docs.where(col("doc_id") % 5 === 0)
       .select("doc_id", "text", "lang", "source")
     val standing = docs.where(col("doc_id") % 5 =!= 0)
-    // production shape: the index materialized ONCE, probes read it
-    val idx = graft.streaming.CorpusStream.bandIndexOf(standing).localCheckpoint()
+    // production shape: the index materialized ONCE (bandIndexOf pins
+    // it), probes read it
+    val idx = graft.streaming.CorpusStream.bandIndexOf(standing)
     val viaIdx = graft.streaming.CorpusStream.nearDupVsIndex(arrivals, idx)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val self = graft.streaming.CorpusStream.nearDupVsCorpus(arrivals, standing)
