@@ -43,6 +43,9 @@ object Engine {
     *    `useIdInClassName` and artifact isolation below.
     *  - Local disk: `LocalFs.install` swaps in a Hadoop local
     *    filesystem that forks no `chmod`/`readlink` per file.
+    *  - RocksDB changelog checkpointing: a stateful micro-batch
+    *    commits one changelog file per state partition, not a flushed,
+    *    uploaded and deleted snapshot; the caller's value wins.
     */
   def prepare(spark: SparkSession): SparkSession = {
     sizeCodegenCache(spark)
@@ -71,6 +74,16 @@ object Engine {
     // multiple column families transformWithState needs.
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // Changelog checkpointing: a state commit writes one changelog file
+    // per partition instead of flushing the memtable, taking a local
+    // checkpoint, uploading it and `rm -rf`-ing the checkpoint dir on
+    // the trigger path; background maintenance uploads the snapshots.
+    // A restarted query replays the changelogs since the last uploaded
+    // snapshot. Checkpoints written in either mode load in the other.
+    // The caller's SparkConf value, if any, is already in the session.
+    val changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    if (!spark.sparkContext.getConf.contains(changelog))
+      spark.conf.set(changelog, "true")
     // TxLog's DataSourceV2 catalog: `graft.`<table-dir>`` identifiers
     // resolve to TxLog snapshots with SQL time travel (VERSION AS OF /
     // TIMESTAMP AS OF), INSERT INTO/OVERWRITE, and DELETE FROM.

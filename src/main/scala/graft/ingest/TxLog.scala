@@ -3681,7 +3681,11 @@ object TxLog {
     * this query, and the eviction happens in the next data batch. The
     * switch is scoped around `.start()` on the caller's session (see
     * `StreamStart` for why not a cloned session), so the query stays
-    * in `spark.streams` and its listeners hear it. */
+    * in `spark.streams` and its listeners hear it. Its dedup state
+    * commits as a RocksDB changelog (`Engine.prepare`): one file per
+    * state partition per batch, no snapshot on the trigger path; a
+    * restarted query replays the changelogs written since the last
+    * snapshot that Spark's background maintenance uploaded. */
   def streamSink(df: DataFrame, table: String,
       checkpointDir: String, autoCheckpointEvery: Int = 64,
       autoCompactFiles: Int = 0, appId: String = ""): StreamingQuery =

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import graft.ingest.{Fixtures, TxLog}
 import graft.pipeline.{Cleaning, PinQueries}
 import graft.streaming.StreamJob
+import scala.jdk.CollectionConverters._
 
 /** Streaming-path specs: parity with batch cleaning, checkpointed
   * restart without duplication, watermarked-dedup mode. */
@@ -308,12 +309,11 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("a watermarked trigger and its restart fork no chmod or readlink") {
-    import scala.jdk.CollectionConverters._
     // the first run commits RocksDB state, the second reloads it from
     // the checkpoint; offset/commit logs and TxLog staging on both
     val runs = triggers("pin", watermarked = true)
     val rec = new jdk.jfr.Recording()
-    rec.enable("jdk.ProcessStart")
+    rec.enable("jdk.ProcessStart").withStackTrace()
     val dump = Files.createTempFile("spawns", ".jfr")
     try {
       rec.start()
@@ -321,12 +321,76 @@ class StreamingSpec extends SparkSpec {
       rec.stop()
       rec.dump(dump)
     } finally rec.close()
-    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
-      .map(_.getString("command")).toSeq
-    // Spark's own `rm -rf` of RocksDB's local checkpoint dirs may run
+    val events = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+    val commands = events.map(_.getString("command"))
     val helpers = commands.filter(c =>
       Set("chmod", "readlink")(c.trim.takeWhile(_ != ' ').split('/').last))
     assert(helpers.size == 0, s"of ${commands.size} starts, e.g. ${helpers.take(3).mkString("; ")}")
+    // with changelog checkpointing a state commit deletes no local
+    // checkpoint dir; Spark's `rm -rf` of RocksDB's local dirs may still
+    // run on the load and close paths
+    val inCommit = events.filter(e => Option(e.getStackTrace).exists(_.getFrames.asScala
+      .exists(f => f.getMethod.getType.getName == RocksDBClass && f.getMethod.getName == "commit")))
+    assert(inCommit.isEmpty,
+      s"of ${events.size} starts, in RocksDB.commit: ${inCommit.map(_.getString("command")).mkString("; ")}")
+  }
+
+  private val RocksDBClass = "org.apache.spark.sql.execution.streaming.state.RocksDB"
+  private val Changelog =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  /** Drain one file per entry of `modes` through the watermarked pin
+    * stream into one TxLog table over one checkpoint, with changelog
+    * checkpointing on or off per run. File `k` holds chunk `k` of `sf`'s
+    * raw pin rows plus a re-send of chunk `k - 1`. Each run adds one
+    * TxLog version, and the table ends as batch cleaning of every
+    * landed row. */
+  private def assertPinRuns(base: String, modes: Seq[Boolean]): Unit = {
+    import org.apache.spark.sql.functions._
+    val raw = graft.pipeline.RawDerive.tables(spark, sf)._1
+    def chunk(k: Int) = raw.where(pmod(xxhash64(col("index")), lit(modes.size)) === k)
+    val in = new java.io.File(s"$base/in")
+    in.mkdirs()
+    val landed = modes.zipWithIndex.map { case (changelog, k) =>
+      val rows = if (k == 0) chunk(0) else chunk(k).union(chunk(k - 1))
+      val stage = new java.io.File(s"$base/stage$k")
+      rows.select(to_json(struct(rows.columns.toIndexedSeq.map(col): _*)).as("data"))
+        .coalesce(1).write.json(stage.getPath)
+      val part = stage.listFiles().filter(_.getName.endsWith(".json")).head
+      Files.move(part.toPath, in.toPath.resolve(f"f$k%02d.json"))
+      val prev = spark.conf.getOption(Changelog)
+      spark.conf.set(Changelog, changelog.toString)
+      try {
+        val src = StreamJob.source(spark, in.getPath, StreamJob.schemas("pin"))
+        TxLog.streamSink(StreamJob.cleanStream(src, "pin", watermarked = true),
+          s"$base/table", s"$base/ckpt").awaitTermination()
+      } finally prev.fold(spark.conf.unset(Changelog))(spark.conf.set(Changelog, _))
+      assert(TxLog.latestVersion(s"$base/table").contains(k.toLong), s"run $k: one commit")
+      rows
+    }
+    assert(multiset(TxLog.snapshot(spark, s"$base/table")) ==
+      multiset(Cleaning.cleanPin(landed.reduce(_ union _))))
+  }
+
+  /** Names of the files under `base`'s state checkpoint. */
+  private def stateFiles(base: String): Seq[String] =
+    Files.walk(java.nio.file.Paths.get(s"$base/ckpt/state")).iterator().asScala
+      .map(_.getFileName.toString).toSeq
+
+  test("a watermarked pin checkpoint resumes across changelog off, on and off again") {
+    val base = tmp("st_changelog_switch")
+    assertPinRuns(base, Seq(false, true, false))
+    val names = stateFiles(base)
+    assert(names.exists(_.endsWith(".changelog")) && names.exists(_.endsWith(".zip")),
+      names.mkString(","))
+  }
+
+  test("12 changelog restarts, past the snapshot threshold, keep the dedup exact") {
+    // more restarts than minDeltasForSnapshot (10), each re-sending
+    // the rows of the run before
+    val base = tmp("st_changelog_restarts")
+    assertPinRuns(base, Seq.fill(12)(true))
+    assert(stateFiles(base).exists(_.endsWith(".changelog")))
   }
 
   test("watermarked windowed aggregation keeps its no-data batch: the closed window lands") {
